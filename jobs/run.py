@@ -49,7 +49,10 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--generate", type=int, default=0,
                    help="generate N synthetic conversations instead of --input")
     p.add_argument("--output", required=True)
-    p.add_argument("--n-buckets", type=int, default=64)
+    p.add_argument("--n-buckets", type=int, default=64,
+                   help="output buckets; with --backfill-day it sets only "
+                        "the layout of a newly created feature table (a "
+                        "MERGE uses the count in the table's manifest)")
     p.add_argument("--buckets-per-wave", type=int, default=16)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--backfill-day",

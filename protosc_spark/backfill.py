@@ -42,11 +42,14 @@ def incremental_backfill(
     (both snapshot tables).
 
     Plan shape: the day's partitions (pruned scan) yield the affected
-    conversation keys; their FULL history is read from only their
-    buckets (static bucket pruning + a broadcast semi-join on
-    conv_id); flagship features are recomputed for those conversations
-    alone; the result snapshot-MERGEs into the feature table (first
-    call bootstraps it with a plain snapshot write). Nothing in the
+    conversation keys, counted per bucket in one collect; their FULL
+    history is read from only their buckets (static bucket pruning + a
+    broadcast semi-join on conv_id); flagship features are recomputed
+    for those conversations alone; the result snapshot-MERGEs into the
+    feature table, whose summary gives the refreshed row count. The
+    first call bootstraps the feature table with a plain snapshot
+    write; ``n_buckets`` sets only that new table's layout (a MERGE
+    uses the bucket count in the table's manifest). Nothing in the
     job scales with the table — only with the day's blast radius.
     """
     from protosc_spark.pipeline import flagship_features
@@ -54,29 +57,27 @@ def incremental_backfill(
     table = snapshot_read(spark, table_path)
     day_rows = table.where(F.col("ts_day") == F.lit(day).cast("date"))
     convs = day_rows.select("conv_id", "conv_bucket").distinct()
-    buckets = sorted(
-        r["conv_bucket"] for r in convs.select("conv_bucket").distinct().collect()
-    )
-    if not buckets:
+    per_bucket = convs.groupBy("conv_bucket").count().collect()
+    if not per_bucket:
         return {"day": day, "n_convs": 0, "n_rows_refreshed": 0,
                 "snapshot_id": None}
+    buckets = sorted(r["conv_bucket"] for r in per_bucket)
     hist = table.where(F.col("conv_bucket").isin(buckets)).join(
         F.broadcast(convs.select("conv_id")), "conv_id", "left_semi"
     )
-    n_convs = convs.count()
     feats, _reg = flagship_features(
         hist.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     )
-    feats = feats.localCheckpoint(eager=True)  # computed once: count + write
-    n_rows = feats.count()
+    feats = feats.localCheckpoint(eager=True)  # the MERGE reads it 3x
     if _load_manifests(features_path):
-        m = snapshot_upsert(spark, features_path, feats, n_buckets=n_buckets)
-        snap = m["snapshot_id"]
+        m = snapshot_upsert(spark, features_path, feats)
+        snap, n_rows = m["snapshot_id"], m["n_replaced"] + m["n_inserted"]
     else:
         snap = snapshot_write(feats, features_path, n_buckets=n_buckets)
+        n_rows = feats.count()
     return {
         "day": day,
-        "n_convs": int(n_convs),
+        "n_convs": sum(r["count"] for r in per_bucket),
         "n_rows_refreshed": int(n_rows),
         "snapshot_id": snap,
     }

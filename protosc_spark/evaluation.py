@@ -4270,6 +4270,9 @@ def bradley_terry(
         ).alias("g"),
     )
 
+    # an empty (or all zero-game) input has no items: drop the
+    # assembly row so the result is empty instead of indexing [1, 0]
+    one = one.where(F.size("items") > 0)
     k = F.size(F.col("items"))
     idxs = F.sequence(F.lit(1), k)
 

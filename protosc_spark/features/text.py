@@ -101,12 +101,6 @@ def _char_hist_from_tokens(tok_lists: list) -> np.ndarray:
     return flat / (totals * width)
 
 
-@F.pandas_udf(ARR)
-def _char_hist_udf(texts: pd.Series) -> pd.Series:
-    m = token_length_hist_np(texts.fillna("").to_numpy())
-    return pd.Series(list(m))
-
-
 def _char_hist_jvm(df: DataFrame) -> Column:
     """Pure-JVM variant, bit-equal to token_length_hist_np. NOT the
     default: Spark evaluates higher-order functions (transform/filter)
@@ -217,12 +211,6 @@ def _ngram_from_tokens(tok_lists: list, buckets: int = NGRAM_BUCKETS) -> np.ndar
     totals = flat.sum(axis=1, keepdims=True).astype(np.float64)
     totals[totals == 0] = 1.0
     return flat / totals
-
-
-@F.pandas_udf(ARR)
-def _hashed_ngram_udf(texts: pd.Series) -> pd.Series:
-    m = hashed_ngram_np(texts.fillna("").to_numpy())
-    return pd.Series(list(m))
 
 
 def _hashed_ngram_jvm(df: DataFrame) -> Column:

@@ -26,31 +26,62 @@ query's scan must list PartitionFilters on ts_day, and a single-
 conversation lookup must touch only its bucket's files (1/N of the
 table) — the properties that make point lookups and incremental
 (daily) feature backfills O(day) instead of O(table) at 100 TB.
+
+Both layouts share ONE partition-MERGE planner (``_merge_plan``): it
+finds the touched (ts_day, conv_bucket) partitions and the
+replaced/inserted counts from two grouped collects, and builds the
+survivors-plus-updates frame. Only the commit differs:
+``upsert_transcripts`` rewrites the live layout in place by dynamic
+partition overwrite, and ``snapshot_upsert`` stages new files and
+commits a manifest.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import glob
+import json
+import math
+import os
+import shutil
+from collections import defaultdict
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 8
 
 
+def _bucket(conv_id: Column, n_buckets: int) -> Column:
+    """The engine-wide stable bucket, pmod(xxhash64(conv_id), N) —
+    identical to checkpoint.with_bucket and the dedup/asof salting, so
+    one layout serves them all."""
+    return F.pmod(F.xxhash64(conv_id), F.lit(n_buckets)).cast("int")
+
+
+def _partition_cols(df: DataFrame, n_buckets: int) -> DataFrame:
+    return df.withColumn("ts_day", F.to_date("ts")).withColumn(
+        "conv_bucket", _bucket(F.col("conv_id"), n_buckets)
+    )
+
+
+def _part_dir(day: str, bucket: int) -> str:
+    return f"ts_day={day}/conv_bucket={bucket}"
+
+
+def _in_partition(day: str, bucket: int) -> Column:
+    return (F.col("ts_day") == F.lit(day).cast("date")) & (
+        F.col("conv_bucket") == F.lit(int(bucket))
+    )
+
+
 def write_transcript_table(
     df: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> None:
-    """Write transcripts partitioned by (ts_day, conv_bucket).
-
-    The bucket expression is the engine-wide stable hash
-    (pmod(xxhash64(conv_id), N)) — identical to checkpoint.with_bucket
-    and the dedup/asof salting, so one layout serves them all.
-    """
+    """Write transcripts partitioned by (ts_day, conv_bucket) with the
+    engine-wide bucket expression (``_bucket``)."""
     (
-        df.withColumn("ts_day", F.to_date("ts"))
-        .withColumn(
-            "conv_bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-        )
+        _partition_cols(df, n_buckets)
         .write.mode("overwrite")
         .partitionBy("ts_day", "conv_bucket")
         .parquet(path)
@@ -94,11 +125,79 @@ def scan_conversation(
     conv_bucket predicate prunes every other bucket directory; the
     exact conv_id equality then filters within the bucket."""
     return df.where(
-        (
-            F.col("conv_bucket")
-            == F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(n_buckets)).cast("int")
-        )
+        (F.col("conv_bucket") == _bucket(F.lit(conv_id), n_buckets))
         & (F.col("conv_id") == conv_id)
+    )
+
+
+class _MergePlan(NamedTuple):
+    touched: set[tuple[str, int]]  # (ts_day, conv_bucket) to rewrite
+    n_replaced: int
+    n_inserted: int
+    out: DataFrame  # survivors of the touched partitions + the updates
+
+    def summary(self) -> dict:
+        return {
+            "partitions_rewritten": len(self.touched),
+            "n_replaced": self.n_replaced,
+            "n_inserted": self.n_inserted,
+        }
+
+
+def _merge_plan(
+    table: DataFrame, updates: DataFrame, n_buckets: int
+) -> _MergePlan:
+    """Plan a partition-level MERGE of ``updates`` into ``table`` (the
+    Iceberg ``MERGE INTO ... ON t.conv_id = s.conv_id AND t.turn_idx =
+    s.turn_idx`` with copy-on-write at partition granularity): rows in
+    ``updates`` REPLACE existing rows with the same (conv_id,
+    turn_idx) and new keys are inserted.
+
+    A correction may MOVE a turn across days (ts edit), so the stale
+    row's OLD partition is touched too, or a duplicate survives. Two
+    grouped collects, both bounded by the update batch, give the plan:
+
+    - ``updates`` grouped by partition: the update partitions, the
+      buckets to prune to, and the update count;
+    - the table's update buckets (static pruning on conv_bucket, 1/N
+      of the table per distinct bucket) semi-joined to the update keys
+      and grouped by partition: the stale partitions and
+      ``n_replaced``.
+
+    ``out`` reads only the touched partitions, anti-joined against the
+    update keys, plus the updates: the full new content of every
+    touched partition. A touched partition that ``out`` does not
+    contain was emptied by the merge.
+    """
+    up = _partition_cols(updates, n_buckets)
+    keys = F.broadcast(up.select("conv_id", "turn_idx"))
+
+    def per_partition(df: DataFrame) -> dict[tuple[str, int], int]:
+        return {
+            (str(r["ts_day"]), r["conv_bucket"]): r["count"]
+            for r in df.groupBy("ts_day", "conv_bucket").count().collect()
+        }
+
+    up_parts = per_partition(up)
+    buckets = sorted({bucket for _day, bucket in up_parts})
+    stale_parts = per_partition(
+        table.where(F.col("conv_bucket").isin(buckets)).join(
+            keys, ["conv_id", "turn_idx"], "left_semi"
+        )
+    )
+    touched = set(up_parts) | set(stale_parts)
+    part_filter = F.lit(False)
+    for part in sorted(touched):
+        part_filter = part_filter | _in_partition(*part)
+    survivors = table.where(part_filter).join(
+        keys, ["conv_id", "turn_idx"], "left_anti"
+    )
+    n_replaced = sum(stale_parts.values())
+    return _MergePlan(
+        touched=touched,
+        n_replaced=n_replaced,
+        n_inserted=sum(up_parts.values()) - n_replaced,
+        out=survivors.select(*up.columns).unionByName(up),
     )
 
 
@@ -108,89 +207,38 @@ def upsert_transcripts(
     updates: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
-    """Partition-level MERGE into a written transcript table: rows in
-    ``updates`` REPLACE existing rows with the same (conv_id,
-    turn_idx) and new keys are inserted, rewriting ONLY the touched
-    (ts_day, conv_bucket) partitions — the parquet equivalent of an
-    Iceberg ``MERGE INTO`` with copy-on-write at partition
-    granularity (on a cluster with the Iceberg runtime this whole
-    function becomes one ``MERGE INTO ... ON t.conv_id = s.conv_id
-    AND t.turn_idx = s.turn_idx``).
+    """Partition-level MERGE into a live transcript table (see
+    ``_merge_plan`` for the semantics), committed in place: the merged
+    partitions are rewritten by dynamic partition overwrite, and a
+    touched partition the merge emptied is deleted. Untouched
+    partition files are byte-identical afterwards (pinned in tests).
 
-    Correctness subtlety handled here: a correction may MOVE a turn
-    across days (ts edit), so the stale row's OLD partition must be
-    rewritten too or a duplicate survives. Old partitions are found by
-    scanning only the updated conversations' buckets (static pruning
-    on conv_bucket, 1/N of the table per distinct bucket) for the
-    updated keys.
-
-    Scale shape: everything is bounded by the update batch, never the
-    table — the touched-partition list is |update days + stale days| x
-    |update buckets| entries (collected; a daily incremental load
-    touches ~n_buckets partitions), and only those partitions' rows
-    are read, anti-joined and rewritten via dynamic partition
-    overwrite. Untouched partition files are byte-identical afterwards
-    (pinned in tests).
+    The live layout stores no metadata, so ``n_buckets`` must be the
+    count the table was written with.
 
     Returns {"partitions_rewritten", "n_replaced", "n_inserted"}.
     """
-    up = updates.withColumn("ts_day", F.to_date("ts")).withColumn(
-        "conv_bucket",
-        F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-    )
-    buckets = sorted(
-        r["conv_bucket"]
-        for r in up.select("conv_bucket").distinct().collect()
-    )
-    table = read_transcript_table(spark, path)
-    keys = up.select("conv_id", "turn_idx")
-    # stale copies of updated keys (their partitions need rewriting
-    # even if the update moved the turn to another day)
-    old_hit = (
-        table.where(F.col("conv_bucket").isin(buckets))
-        .join(F.broadcast(keys), ["conv_id", "turn_idx"], "left_semi")
-    )
-    touched = {
-        (r["ts_day"], r["conv_bucket"])
-        for r in old_hit.select("ts_day", "conv_bucket").distinct().collect()
-    } | {
-        (r["ts_day"], r["conv_bucket"])
-        for r in up.select("ts_day", "conv_bucket").distinct().collect()
-    }
-    n_replaced = old_hit.count()
-    n_inserted = up.count() - n_replaced
-    part_filter = F.lit(False)
-    for day, bucket in sorted(touched):
-        part_filter = part_filter | (
-            (F.col("ts_day") == F.lit(day))
-            & (F.col("conv_bucket") == F.lit(bucket))
-        )
-    survivors = (
-        table.where(part_filter)
-        .join(F.broadcast(keys), ["conv_id", "turn_idx"], "left_anti")
-    )
-    out = survivors.select(*up.columns).unionByName(up)
+    plan = _merge_plan(read_transcript_table(spark, path), updates, n_buckets)
     # materialize BEFORE writing: Spark refuses to overwrite a path
     # its own plan reads from; the eager localCheckpoint truncates the
     # lineage to the already-computed rows (bounded by the touched
     # partitions, i.e. by the update batch — never table-scale)
-    out = out.localCheckpoint(eager=True)
-    # dynamic partition overwrite: ONLY partitions present in `out`
-    # are replaced; requires every touched partition to appear in the
-    # output, which part_filter guarantees (a partition emptied of all
-    # rows would need an explicit delete — not expressible in this
-    # parquet stand-in, documented limitation vs real Iceberg MERGE)
+    out = plan.out.localCheckpoint(eager=True)
+    dirs = [os.path.join(path, _part_dir(*p)) for p in plan.touched]
+    before = {d: set(os.listdir(d)) for d in dirs if os.path.isdir(d)}
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ts_day", "conv_bucket")
         .parquet(path)
     )
-    return {
-        "partitions_rewritten": len(touched),
-        "n_replaced": int(n_replaced),
-        "n_inserted": int(n_inserted),
-    }
+    # dynamic overwrite replaces only the partitions present in `out`
+    # (with freshly named files); a touched partition whose listing is
+    # unchanged is one the merge emptied
+    for d, names in before.items():
+        if set(os.listdir(d)) == names:
+            shutil.rmtree(d)
+    return plan.summary()
 
 
 def compact_partitions(
@@ -216,11 +264,6 @@ def compact_partitions(
     only, no data reads) — the same metadata a table format serves
     from its manifest.
     """
-    import glob
-    import math
-    import os
-    from collections import defaultdict
-
     sizes: dict[tuple[str, str], int] = defaultdict(int)
     counts: dict[tuple[str, str], int] = defaultdict(int)
     for f in glob.glob(f"{path}/ts_day=*/conv_bucket=*/*.parquet"):
@@ -232,22 +275,13 @@ def compact_partitions(
     if not victims:
         return {"partitions_compacted": 0, "files_before": 0, "files_after": 0}
 
-    part_filter = F.lit(False)
-    for day, bucket in sorted(victims):
-        part_filter = part_filter | (
-            (F.col("ts_day") == F.lit(day).cast("date"))
-            & (F.col("conv_bucket") == F.lit(int(bucket)))
-        )
     table = read_transcript_table(spark, path)
     cols = table.columns
     pieces = []
     for day, bucket in sorted(victims):
         n_out = max(1, math.ceil(sizes[(day, bucket)] / target_bytes))
         piece = (
-            table.where(
-                (F.col("ts_day") == F.lit(day).cast("date"))
-                & (F.col("conv_bucket") == F.lit(int(bucket)))
-            )
+            table.where(_in_partition(day, bucket))
             .repartition(n_out)
             .sortWithinPartitions("conv_id", "turn_idx")
         )
@@ -293,22 +327,15 @@ def compact_partitions(
 # work exactly as on the live layout. Because old files are never
 # touched, reads of ANY retained snapshot are consistent while new
 # commits land — snapshot isolation — and rollback is just a new
-# manifest referencing an old file set, as in Iceberg. This also
-# expresses the one thing the dynamic-overwrite stand-in could not: a
-# MERGE that empties a partition simply drops its files from the new
-# manifest (upsert_transcripts' documented limitation).
+# manifest referencing an old file set, as in Iceberg. A MERGE that
+# empties a partition simply drops its files from the new manifest.
 
 
 def _manifest_dir(path: str) -> str:
-    import os
-
     return os.path.join(path, "_snapshots")
 
 
 def _load_manifests(path: str) -> list[dict]:
-    import json
-    import os
-
     d = _manifest_dir(path)
     if not os.path.isdir(d):
         return []
@@ -321,9 +348,6 @@ def _load_manifests(path: str) -> list[dict]:
 
 
 def _commit_manifest(path: str, snap: dict) -> None:
-    import json
-    import os
-
     d = _manifest_dir(path)
     os.makedirs(d, exist_ok=True)
     final = os.path.join(d, f"{snap['snapshot_id']:08d}.json")
@@ -337,9 +361,6 @@ def _ingest_staged(path: str, snap_id: int, staged: str) -> list[str]:
     """Move staged part files into the shared partition directories
     under snapshot-prefixed names; returns their manifest-relative
     paths. Driver metadata work only (one rename per file)."""
-    import os
-    import shutil
-
     files = []
     for root, _dirs, fns in os.walk(staged):
         for fn in fns:
@@ -355,21 +376,12 @@ def _ingest_staged(path: str, snap_id: int, staged: str) -> list[str]:
     return sorted(files)
 
 
-def _partition_cols(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn("ts_day", F.to_date("ts")).withColumn(
-        "conv_bucket",
-        F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-    )
-
-
 def snapshot_write(
     df: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> int:
     """Create snapshot 1 (or a full-replace snapshot on an existing
     table): stage a normal partitioned write, ingest, commit one
     manifest referencing only the new files. Returns the snapshot id."""
-    import os
-
     prev = _load_manifests(path)
     snap_id = (prev[-1]["snapshot_id"] + 1) if prev else 1
     staged = os.path.join(path, "_staging")
@@ -400,8 +412,6 @@ def snapshot_read(
     travel. The manifest's explicit file list is read with basePath =
     the shared data root, so partition columns and pruning behave
     exactly as on a live scan."""
-    import os
-
     mans = _load_manifests(path)
     if not mans:
         raise ValueError(f"no snapshots at {path}")
@@ -426,66 +436,29 @@ def snapshot_read(
 
 
 def snapshot_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
+    spark: SparkSession, path: str, updates: DataFrame
 ) -> dict:
-    """Snapshot-isolated MERGE (the Iceberg ``MERGE INTO`` with
-    copy-on-write at partition granularity): same key/partition
-    semantics as upsert_transcripts — updates REPLACE rows with the
-    same (conv_id, turn_idx), new keys insert, a ts edit that moves a
-    turn across days rewrites the stale partition too — but the commit
-    NEVER mutates existing files: rewritten partitions get new
-    snapshot-prefixed files and the new manifest simply drops the old
-    ones, so every prior snapshot stays readable (time travel) and a
-    partition emptied by the merge genuinely disappears from the new
-    snapshot. Returns the merge summary + new snapshot id."""
-    import os
-
+    """Snapshot-isolated MERGE (see ``_merge_plan`` for the
+    semantics), committed without mutating any existing file: the
+    touched partitions get new snapshot-prefixed files and the new
+    manifest drops the old ones, so every prior snapshot stays
+    readable (time travel) and a partition emptied by the merge
+    disappears from the new snapshot. The bucket count comes from the
+    table's manifest. Returns the merge summary + new snapshot id."""
     mans = _load_manifests(path)
     if not mans:
         raise ValueError(f"no snapshots at {path}")
     prev = mans[-1]
     snap_id = prev["snapshot_id"] + 1
-    up = _partition_cols(updates, n_buckets)
-    buckets = sorted(
-        r["conv_bucket"] for r in up.select("conv_bucket").distinct().collect()
-    )
-    table = snapshot_read(spark, path)
-    keys = up.select("conv_id", "turn_idx")
-    old_hit = table.where(F.col("conv_bucket").isin(buckets)).join(
-        F.broadcast(keys), ["conv_id", "turn_idx"], "left_semi"
-    )
-    touched = {
-        (str(r["ts_day"]), int(r["conv_bucket"]))
-        for r in old_hit.select("ts_day", "conv_bucket").distinct().collect()
-    } | {
-        (str(r["ts_day"]), int(r["conv_bucket"]))
-        for r in up.select("ts_day", "conv_bucket").distinct().collect()
-    }
-    n_replaced = old_hit.count()
-    n_inserted = up.count() - n_replaced
-    part_filter = F.lit(False)
-    for day, bucket in sorted(touched):
-        part_filter = part_filter | (
-            (F.col("ts_day") == F.lit(day).cast("date"))
-            & (F.col("conv_bucket") == F.lit(bucket))
-        )
-    survivors = table.where(part_filter).join(
-        F.broadcast(keys), ["conv_id", "turn_idx"], "left_anti"
-    )
-    out = survivors.select(*up.columns).unionByName(up)
+    plan = _merge_plan(snapshot_read(spark, path), updates, prev["n_buckets"])
     staged = os.path.join(path, "_staging")
     (
-        out.write.mode("overwrite")
+        plan.out.write.mode("overwrite")
         .partitionBy("ts_day", "conv_bucket")
         .parquet(staged)
     )
     new_files = _ingest_staged(path, snap_id, staged)
-    touched_dirs = {
-        f"ts_day={day}/conv_bucket={bucket}" for day, bucket in touched
-    }
+    touched_dirs = {_part_dir(*p) for p in plan.touched}
     kept = [
         f for f in prev["files"]
         if "/".join(f.split("/")[:2]) not in touched_dirs
@@ -497,15 +470,10 @@ def snapshot_upsert(
             "parent": prev["snapshot_id"],
             "operation": "merge",
             "files": sorted(kept + new_files),
-            "n_buckets": n_buckets,
+            "n_buckets": prev["n_buckets"],
         },
     )
-    return {
-        "snapshot_id": snap_id,
-        "partitions_rewritten": len(touched),
-        "n_replaced": int(n_replaced),
-        "n_inserted": int(n_inserted),
-    }
+    return {"snapshot_id": snap_id, **plan.summary()}
 
 
 def snapshot_rollback(path: str, snapshot_id: int) -> int:
@@ -558,9 +526,6 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
     ``expire_snapshots`` + orphan-file cleanup). Time travel to
     expired snapshots is gone afterwards; retained reads are
     untouched."""
-    import glob
-    import os
-
     mans = _load_manifests(path)
     if len(mans) <= keep_last:
         return {"snapshots_expired": 0, "files_deleted": 0}
@@ -596,9 +561,6 @@ def snapshot_compact(
     partition per run, and at 100 TB a scan's task count follows the
     file count, so compaction is what keeps read amortization flat.
     """
-    import os
-    from collections import defaultdict
-
     mans = _load_manifests(path)
     if not mans:
         raise ValueError(f"no snapshots at {path}")

@@ -69,7 +69,9 @@ def test_correction_backfill_propagates_to_later_turns(spark, tmp_path):
     )
     day = str(fix.select(F.to_date("ts")).first()[0])
     snapshot_upsert(spark, tpath, fix)
-    m = incremental_backfill(spark, tpath, fpath, day)
+    # a bucket count unlike the feature table's (8): the MERGE must
+    # take the table's own count from its manifest
+    m = incremental_backfill(spark, tpath, fpath, day, n_buckets=64)
     assert m["n_rows_refreshed"] > 1  # whole conversations, not 1 row
     corrected = snapshot_read(spark, tpath).select(*tr.columns)
     full, _ = flagship_features(corrected)

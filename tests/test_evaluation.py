@@ -3402,6 +3402,12 @@ class TestBradleyTerry:
         out = self._fit(spark, rows)
         assert set(out) == {"a", "b"}
 
+    @pytest.mark.parametrize(
+        "rows", [[], [("a", "q", 0.0, 0.0)]], ids=["empty", "zero_games"]
+    )
+    def test_no_games_gives_empty_result(self, spark, rows):
+        assert self._fit(spark, rows) == {}
+
 
 # ------------------------------------------------ mondrian conformal
 class TestConformalByGroup:

@@ -264,13 +264,8 @@ class TestCompaction:
 # ---------------------------------------------------------------------------
 
 
-def _snapshot_fixture(spark, tmp_path):
-    from protosc_spark.datagen import generate_transcripts
-    from protosc_spark.tables import snapshot_upsert, snapshot_write
-
-    tr = generate_transcripts(spark, n_conversations=40, seed=42)
-    path = str(tmp_path / "snap_t")
-    snapshot_write(tr, path)
+def _correction_batch(tr):
+    """Replace 3 texts, insert 2 turns, move 1 turn 3 days later."""
     first = tr.orderBy("conv_id", "turn_idx").limit(3)
     repl = first.withColumn("text", F.lit("CORRECTED"))
     ins = first.limit(2).select(
@@ -281,16 +276,26 @@ def _snapshot_fixture(spark, tmp_path):
     moved = mover.withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 3 DAYS")
     ).withColumn("text", F.lit("MOVED"))
-    updates = repl.unionByName(ins.select(*repl.columns)).unionByName(
+    return repl.unionByName(ins.select(*repl.columns)).unionByName(
         moved.select(*repl.columns)
     )
-    m = snapshot_upsert(spark, path, updates)
+
+
+def _snapshot_fixture(spark, tmp_path):
+    from protosc_spark.datagen import generate_transcripts
+    from protosc_spark.tables import snapshot_upsert, snapshot_write
+
+    tr = generate_transcripts(spark, n_conversations=40, seed=42)
+    path = str(tmp_path / "snap_t")
+    snapshot_write(tr, path)
+    m = snapshot_upsert(spark, path, _correction_batch(tr))
     return tr, path, m
 
 
 def test_snapshot_merge_and_time_travel(spark, tmp_path):
-    """MERGE semantics match upsert_transcripts AND every prior
-    snapshot stays exactly readable (snapshot isolation)."""
+    """The MERGE replaces, inserts and moves without duplicate keys,
+    AND every prior snapshot stays exactly readable (snapshot
+    isolation)."""
     import pandas as pd
 
     from protosc_spark.tables import snapshot_read
@@ -316,6 +321,50 @@ def test_snapshot_merge_and_time_travel(spark, tmp_path):
         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_live_and_snapshot_merge_agree(spark, tmp_path):
+    """One correction batch (replace, insert, cross-day move) through
+    both commits gives equal summaries and equal rows, and the
+    snapshot MERGE runs a pinned number of Spark jobs."""
+    from protosc_spark.datagen import generate_transcripts
+    from protosc_spark.tables import (
+        read_transcript_table,
+        snapshot_read,
+        snapshot_upsert,
+        snapshot_write,
+        upsert_transcripts,
+        write_transcript_table,
+    )
+
+    tr = generate_transcripts(spark, n_conversations=40, seed=42)
+    tr = tr.localCheckpoint(eager=True)
+    updates = _correction_batch(tr).localCheckpoint(eager=True)
+    live, snap = str(tmp_path / "live"), str(tmp_path / "snap")
+    write_transcript_table(tr, live)
+    snapshot_write(tr, snap)
+    m_live = upsert_transcripts(spark, live, updates)
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot_upsert", "jobs of one snapshot MERGE")
+    try:
+        m_snap = snapshot_upsert(spark, snap, updates)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("snapshot_upsert")
+    assert m_snap.pop("snapshot_id") == 2
+    assert m_live == m_snap == {
+        "partitions_rewritten": m_live["partitions_rewritten"],
+        "n_replaced": 4,
+        "n_inserted": 2,
+    }
+    cols = ["ts_day", "conv_bucket", *tr.columns]
+    a = read_transcript_table(spark, live).select(cols)
+    b = snapshot_read(spark, snap).select(cols)
+    assert a.count() == tr.count() + 2
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    # two grouped collects plan the MERGE and one staged write commits
+    # it; AQE runs each of their shuffle stages as a job of its own
+    assert len(jobs) == 8
 
 
 def test_snapshot_rollback_and_expire(spark, tmp_path):
@@ -353,46 +402,44 @@ def test_snapshot_rollback_and_expire(spark, tmp_path):
         snapshot_read(spark, path, 2)
 
 
-def test_snapshot_merge_can_empty_a_partition(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["live", "snapshot"])
+def test_snapshot_merge_can_empty_a_partition(spark, tmp_path, layout):
     """A MERGE that moves EVERY row out of a (day, bucket) partition
-    drops that partition from the new snapshot (the delete the
-    dynamic-overwrite stand-in could not express) while time travel
-    still shows it."""
+    drops that partition from the table in both layouts: the live
+    commit deletes its directory, the snapshot commit leaves it out of
+    the new manifest while time travel still shows it."""
+    from protosc_spark import tables as T
     from protosc_spark.datagen import generate_transcripts
-    from protosc_spark.tables import (
-        snapshot_read,
-        snapshot_upsert,
-        snapshot_write,
-    )
 
+    write, read, upsert = {
+        "live": (T.write_transcript_table, T.read_transcript_table,
+                 T.upsert_transcripts),
+        "snapshot": (T.snapshot_write, T.snapshot_read, T.snapshot_upsert),
+    }[layout]
     tr = generate_transcripts(spark, n_conversations=20, seed=7)
     path = str(tmp_path / "snap_e")
-    snapshot_write(tr, path)
-    live = snapshot_read(spark, path)
+    write(tr, path)
+    before = read(spark, path)
     # pick the smallest partition and move all of its rows +30 days
     day, bucket, _n = (
-        live.groupBy("ts_day", "conv_bucket").count()
+        before.groupBy("ts_day", "conv_bucket").count()
         .orderBy("count", "ts_day", "conv_bucket").first()
     )
-    victim = live.where(
-        (F.col("ts_day") == F.lit(day)) & (F.col("conv_bucket") == bucket)
-    ).select(*tr.columns)
-    updates = victim.withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
-    snapshot_upsert(spark, path, updates)
-    after = snapshot_read(spark, path)
-    assert (
-        after.where(
-            (F.col("ts_day") == F.lit(day))
-            & (F.col("conv_bucket") == bucket)
-        ).count() == 0
+    in_victim = (F.col("ts_day") == F.lit(day)) & (
+        F.col("conv_bucket") == bucket
     )
+    victim = before.where(in_victim).select(*tr.columns)
+    updates = victim.withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
+    upsert(spark, path, updates.localCheckpoint(eager=True))
+    after = read(spark, path)
+    assert after.where(in_victim).count() == 0
     assert after.count() == tr.count()  # rows moved, none lost
     assert (
-        snapshot_read(spark, path, 1).where(
-            (F.col("ts_day") == F.lit(day))
-            & (F.col("conv_bucket") == bucket)
-        ).count() > 0
+        after.groupBy("conv_id", "turn_idx").count()
+        .where("count > 1").count() == 0
     )
+    if layout == "snapshot":
+        assert T.snapshot_read(spark, path, 1).where(in_victim).count() > 0
 
 
 def test_snapshot_read_keeps_partition_pruning(spark, tmp_path):
