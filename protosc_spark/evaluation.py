@@ -2,41 +2,99 @@
 
 protosc scores models with fold accuracy (model/utils.py
 compute_accuracy — covered by models/search.py); at corpus scale the
-standard readouts are threshold-free ranking quality (AUC) and
-probability calibration (reliability bins / ECE). Both here are
-EXACT and engine-reproducible:
+standard readouts are threshold-free ranking quality, operating
+points, calibration, agreement and two-sample drift. Every statistic
+here is EXACT and engine-reproducible: sufficient statistics are
+integer counts accumulated in DECIMAL(38,0), and floating point
+enters only in the final division (or in per-term values quantized
+to integer units before a cross-row sum).
 
-* :func:`auc_exact` — the Mann-Whitney U formulation with full tie
-  handling, computed from the score-value histogram: group rows by
-  DISTINCT SCORE VALUE (pos/neg counts per value), then
-  U = sum_s pos_s * (neg_below_s + neg_s / 2), doubled to stay
-  integer. The only window runs over distinct score values — for the
-  integer-ish scores the engine produces (counts, lengths, quantized
-  probabilities) that is thousands of rows, never the corpus. For a
-  continuous score, quantize first (sketches.hdr_histogram is the
-  scale path); AUC over the quantized score is AUC of the quantized
-  ranking, exactly.
-* :func:`calibration_bins` — fixed-width reliability bins with
-  per-bin confidence vs empirical rate and the Expected Calibration
-  Error sum_b (n_b / n) |rate_b - conf_b|.
-* :func:`ks_two_sample` — the two-sample Kolmogorov–Smirnov
-  statistic sup_x |F_a(x) - F_b(x)| from the same value-histogram
-  collapse, kept integer-exact by cross-multiplying the two ECDF
-  numerators (|cum_a * n_b - cum_b * n_a|) so the sup is found over
-  exact integers and divided once at the end.
-* :func:`cohens_kappa` — chance-corrected agreement between two
-  categorical columns from the integer confusion matrix:
-  kappa = (N * diag - sum_k row_k * col_k) / (N^2 - sum_k row_k *
-  col_k), one float division at the end.
+The two-sample drift and ranking family shares one kernel, the
+value histogram and its CDF:
+
+* :func:`_value_hist` — one map-side-combined ``groupBy(value)``
+  giving, per distinct non-NULL value ``v``, the group-1 count ``a``
+  and the group-0 count ``b``. The result is distinct-value-sized,
+  never corpus-sized.
+* :func:`_value_cdf` — one window spec ordered by ``v`` over that
+  histogram adds the exclusive below-counts ``ca``/``cb`` (rows with
+  a value < v) and the totals ``n1``/``n0``. An inclusive count is
+  ``ca + a``; a descending (>= v) count is ``n1 - ca``.
+  :func:`_cdf_gap` is the ECDF gap at v, cross-multiplied by
+  ``n1 * n0`` to an exact integer (KS, Kuiper, CvM, W1).
+
+Each statistic of the family is one aggregate over those columns:
+:func:`auc_exact`, :func:`ks_two_sample`,
+:func:`wasserstein_by_group`, :func:`mannwhitney_u`,
+:func:`cvm_two_sample`, :func:`kuiper_two_sample`,
+:func:`youden_threshold`, :func:`average_precision`,
+:func:`energy_distance` and :func:`ad_two_sample` sit on
+:func:`_value_cdf`; :func:`distribution_distances` needs no order
+and sits on :func:`_value_hist` alone. Argmax readouts (``ks_at``,
+the Youden threshold) are the smallest value attaining the maximum,
+taken in that same aggregate.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+_DEC = "decimal(38,0)"
+
+
+def _value_hist(df: DataFrame, value: Column, group_col: str
+                ) -> DataFrame:
+    """Two-sample value histogram: one row (v, a, b) per distinct
+    ``value``, with ``a`` the group-1 rows (``group_col`` truthy) and
+    ``b`` the group-0 rows, both DECIMAL(38,0). Rows whose value or
+    group is NULL are dropped. ``value`` is a Column, so a caller
+    that needs integer arithmetic on ``v`` passes it cast."""
+    y = F.col(group_col).cast("int")
+    return (
+        df.where(value.isNotNull() & F.col(group_col).isNotNull())
+        .groupBy(value.alias("v"))
+        .agg(
+            F.sum(y).cast(_DEC).alias("a"),
+            F.sum(1 - y).cast(_DEC).alias("b"),
+        )
+    )
+
+
+def _value_cdf(hist: DataFrame, **below: Column) -> DataFrame:
+    """The CDF of a :func:`_value_hist`: adds the exclusive
+    below-counts ``ca``/``cb`` (sums of ``a``/``b`` over values < v)
+    and the totals ``n1``/``n0``, plus one exclusive prefix sum per
+    keyword expression in ``below``. Everything comes from one
+    ``orderBy(v)`` window spec, so there is one sort of the
+    distinct-value table and no separate totals aggregate."""
+    order = W.orderBy("v")
+    lt = order.rowsBetween(W.unboundedPreceding, -1)
+    every = order.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    zero = F.lit(0).cast(_DEC)
+    sums = {"ca": F.col("a"), "cb": F.col("b"), **below}
+    return hist.select(
+        "*",
+        *(
+            F.coalesce(F.sum(e).over(lt), zero).alias(k)
+            for k, e in sums.items()
+        ),
+        F.sum("a").over(every).alias("n1"),
+        F.sum("b").over(every).alias("n0"),
+    )
+
+
+def _cdf_gap() -> Column:
+    """n1 * n0 * (F_1(v) - F_0(v)) over a :func:`_value_cdf`: the
+    signed gap between the two inclusive ECDFs at v, cross-multiplied
+    to an exact integer."""
+    return (
+        (F.col("ca") + F.col("a")) * F.col("n0")
+        - (F.col("cb") + F.col("b")) * F.col("n1")
+    )
 
 
 def auc_exact(df: DataFrame, score_col: str, label_col: str
@@ -52,32 +110,15 @@ def auc_exact(df: DataFrame, score_col: str, label_col: str
     division is the only floating point. Rows with NULL score or
     label are dropped; AUC is NULL when either class is empty.
     Output: one row (n_pos, n_neg, auc)."""
-    dec = "decimal(19,0)"
-    y = F.col(label_col).cast("int")
-    g = (
-        df.where(
-            F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .groupBy(score_col)
-        .agg(
-            F.sum(y).cast("bigint").alias("pos"),
-            F.sum(1 - y).cast("bigint").alias("neg"),
-        )
-    )
-    w = W.orderBy(score_col).rowsBetween(W.unboundedPreceding, -1)
-    nd = F.col("neg").cast(dec)
-    below = F.coalesce(
-        F.sum(nd).over(w), F.lit(0).cast(dec)
-    )
-    u2 = F.col("pos").cast(dec) * (
-        F.lit(2).cast(dec) * below + nd
-    )
-    agg = g.select(
-        "pos", "neg", u2.alias("u2")
+    agg = _value_cdf(
+        _value_hist(df, F.col(score_col), label_col)
     ).agg(
-        F.sum("pos").alias("__p"),
-        F.sum("neg").alias("__n"),
-        F.sum("u2").alias("__u2"),
+        F.max("n1").alias("__p"),
+        F.max("n0").alias("__n"),
+        F.sum(
+            F.col("a")
+            * (F.lit(2).cast(_DEC) * F.col("cb") + F.col("b"))
+        ).alias("__u2"),
     )
     p, n, u = (
         F.col(c).cast("double") for c in ("__p", "__n", "__u2")
@@ -156,67 +197,38 @@ def ks_two_sample(df: DataFrame, value_col: str, group_col: str
 
         ks = sup_x |F_1(x) - F_0(x)|
 
-    evaluated at every distinct value via the value-histogram
-    collapse (one groupBy(value) with map-side combine; the only
-    window runs over DISTINCT VALUES, never corpus rows — the same
-    shape as :func:`auc_exact`). The sup is found over the exact
-    integer cross-product |cum_1 * n_0 - cum_0 * n_1| accumulated in
-    DECIMAL(38,0); the single division happens at the end, so the
-    statistic is order-independent and engine-reproducible.
+    evaluated at every distinct value of :func:`_value_cdf` (the
+    only window runs over DISTINCT VALUES, never corpus rows). The
+    sup is found over the exact integer cross-product
+    |cum_1 * n_0 - cum_0 * n_1| (cum = inclusive counts) in
+    DECIMAL(38,0), and ``ks_at`` is taken in the same aggregate as
+    the smallest value attaining it; the single division happens at
+    the end, so the statistic is order-independent and
+    engine-reproducible.
 
     Rows with NULL value or group are dropped. Output: one row
     (n_1, n_0, ks, ks_at) where ``ks_at`` is the smallest value
     attaining the sup (NULL when either group is empty, along with
     ks)."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    g = (
-        df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .groupBy(value_col)
-        .agg(
-            F.sum(y).cast(dec).alias("__a"),
-            F.sum(1 - y).cast(dec).alias("__b"),
-        )
+    d = F.abs(_cdf_gap())
+    agg = _value_cdf(
+        _value_hist(df, F.col(value_col), group_col)
+    ).agg(
+        F.max("n1").alias("__fa"),
+        F.max("n0").alias("__fb"),
+        F.max(d).alias("__fd"),
+        F.min_by("v", F.struct(-d, F.col("v"))).alias("__at"),
     )
-    w = W.orderBy(value_col).rowsBetween(W.unboundedPreceding, 0)
-    h = g.select(
-        F.col(value_col).alias("__v"),
-        F.sum("__a").over(w).alias("__ca"),
-        F.sum("__b").over(w).alias("__cb"),
-    )
-    tot = g.agg(
-        F.sum("__a").alias("__na"), F.sum("__b").alias("__nb")
-    )
-    d = F.abs(
-        F.col("__ca") * F.col("__nb") - F.col("__cb") * F.col("__na")
-    )
-    scored = h.crossJoin(F.broadcast(tot)).withColumn("__d", d)
-    mx = scored.agg(F.max("__d").alias("__dmax"))
-    return (
-        scored.crossJoin(F.broadcast(mx))
-        .agg(
-            F.first("__na").alias("__fa"),
-            F.first("__nb").alias("__fb"),
-            F.first("__dmax").alias("__fd"),
-            F.min(
-                F.when(F.col("__d") == F.col("__dmax"), F.col("__v"))
-            ).alias("ks_at"),
-        )
-        .select(
-            F.col("__fa").cast("bigint").alias("n_1"),
-            F.col("__fb").cast("bigint").alias("n_0"),
-            F.when(
-                (F.col("__fa") > 0) & (F.col("__fb") > 0),
-                F.col("__fd").cast("double")
-                / (F.col("__fa") * F.col("__fb")).cast("double"),
-            ).alias("ks"),
-            F.when(
-                (F.col("__fa") > 0) & (F.col("__fb") > 0),
-                F.col("ks_at"),
-            ).alias("ks_at"),
-        )
+    ok = (F.col("__fa") > 0) & (F.col("__fb") > 0)
+    return agg.select(
+        F.col("__fa").cast("bigint").alias("n_1"),
+        F.col("__fb").cast("bigint").alias("n_0"),
+        F.when(
+            ok,
+            F.col("__fd").cast("double")
+            / (F.col("__fa") * F.col("__fb")).cast("double"),
+        ).alias("ks"),
+        F.when(ok, F.col("__at")).alias("ks_at"),
     )
 
 
@@ -955,53 +967,19 @@ def wasserstein_by_group(
     the quantized drift scores) exact with NO unit parameter.
     Requires an integer-valued column (the gap arithmetic).
 
-    Same scale shape as KS: one value-histogram groupBy, one
-    distinct-value-sized cumulative window, a broadcast total.
+    Same scale shape as KS: one aggregate over :func:`_value_cdf`,
+    the gap taken by ``lead(v)`` over the same value order.
     Output: one row (n_1, n_0, w1); w1 NULL when either group is
     empty."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    g = (
-        df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .groupBy(value_col)
-        .agg(
-            F.sum(y).cast(dec).alias("__a"),
-            F.sum(1 - y).cast(dec).alias("__b"),
-        )
-        # distinct-value-sized; feeds cum window + totals: scan once
-        .localCheckpoint(eager=True)
-    )
-    w = W.orderBy(value_col).rowsBetween(W.unboundedPreceding, 0)
-    wl = W.orderBy(value_col)
-    h = g.select(
-        F.col(value_col).alias("__v"),
-        F.sum("__a").over(w).alias("__ca"),
-        F.sum("__b").over(w).alias("__cb"),
-        (
-            F.coalesce(
-                F.lead(F.col(value_col).cast(dec)).over(wl),
-                F.col(value_col).cast(dec),
-            )
-            - F.col(value_col).cast(dec)
-        ).alias("__gap"),
-    )
-    tot = g.agg(
-        F.sum("__a").alias("__na"), F.sum("__b").alias("__nb")
-    )
-    term = (
-        F.abs(
-            F.col("__ca") * F.col("__nb")
-            - F.col("__cb") * F.col("__na")
-        )
-        * F.col("__gap")
-    )
+    v = F.col("v").cast(_DEC)
+    gap = F.coalesce(F.lead(v).over(W.orderBy("v")), v) - v
+    term = F.abs(_cdf_gap()) * F.col("__gap")
     return (
-        h.crossJoin(F.broadcast(tot))
+        _value_cdf(_value_hist(df, F.col(value_col), group_col))
+        .withColumn("__gap", gap)
         .agg(
-            F.first("__na").alias("__fa"),
-            F.first("__nb").alias("__fb"),
+            F.max("n1").alias("__fa"),
+            F.max("n0").alias("__fb"),
             F.sum(term).alias("__w"),
         )
         .select(
@@ -1091,10 +1069,10 @@ def mannwhitney_u(df: DataFrame, value_col: str, group_col: str
     quantized scores), robust where Welch's t is not.
 
     No per-row rank join and no corpus sort: every sufficient
-    statistic comes from the VALUE HISTOGRAM (one groupBy(value) with
-    map-side combine; the only window runs over distinct values).
-    Midranks are kept exact by DOUBLING (the house rule shared with
-    :func:`spearman_corr` and :func:`auc_exact`):
+    statistic is one aggregate over :func:`_value_cdf` (the only
+    window runs over distinct values). Midranks are kept exact by
+    DOUBLING (the house rule shared with :func:`spearman_corr` and
+    :func:`auc_exact`):
 
         R1d  = sum_v a_v * (2*cum_t_below(v) + t_v + 1)   (= 2*R1)
         2*U1 = R1d - n1*(n1+1)
@@ -1115,39 +1093,23 @@ def mannwhitney_u(df: DataFrame, value_col: str, group_col: str
     (can end in .5 under ties), rank_biserial = 2*U1/(n1*n0) - 1 the
     effect size in [-1, 1]; z and rank_biserial NULL when either
     group is empty or every row is one tie block."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    h = (
-        df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .groupBy(F.col(value_col).alias("__v"))
-        .agg(
-            F.sum(y).cast(dec).alias("__a"),
-            F.sum(1 - y).cast(dec).alias("__b"),
-        )
-        .withColumn("__t", F.col("__a") + F.col("__b"))
-    )
-    w_cum = W.orderBy("__v").rowsBetween(W.unboundedPreceding, -1)
-    ranked = h.withColumn(
-        "__cum",
-        F.coalesce(F.sum("__t").over(w_cum), F.lit(0).cast(dec)),
-    )
-    g = ranked.agg(
-        F.sum("__a").alias("__n1"),
-        F.sum("__b").alias("__n0"),
+    dec = _DEC
+    t = F.col("a") + F.col("b")
+    g = _value_cdf(
+        _value_hist(df, F.col(value_col), group_col)
+    ).agg(
+        F.max("n1").alias("__n1"),
+        F.max("n0").alias("__n0"),
         F.sum(
-            F.col("__a")
+            F.col("a")
             * (
-                F.lit(2).cast(dec) * F.col("__cum")
-                + F.col("__t")
+                F.lit(2).cast(dec) * (F.col("ca") + F.col("cb"))
+                + t
                 + F.lit(1).cast(dec)
             )
         ).alias("__r1d"),
         F.sum(
-            F.col("__t")
-            * (F.col("__t") - F.lit(1).cast(dec))
-            * (F.col("__t") + F.lit(1).cast(dec))
+            t * (t - F.lit(1).cast(dec)) * (t + F.lit(1).cast(dec))
         ).alias("__tie"),
     )
     n1, n0 = F.col("__n1"), F.col("__n0")
@@ -1202,12 +1164,12 @@ def cvm_two_sample(df: DataFrame, value_col: str, group_col: str
         T = n1*n0 / N^2 * sum_{i=1..N} (F1(x_i) - F2(x_i))^2
           = sum_v t_v * (ca_v*n0 - cb_v*n1)^2 / (N^2 * n1 * n0)
 
-    over the pooled sample via the value-histogram collapse (ca/cb =
-    inclusive cumulative counts; the only window runs over DISTINCT
-    values). The sum S = sum_v t_v*(ca*n0 - cb*n1)^2 accumulates
-    exact DECIMAL(38,0) integers — order-independent, one float
-    division at the end, so the SQL oracle reproduces T digit-for-
-    digit. Exactness envelope: (ca*n0)^2 <= N^4/16, inside
+    over the pooled sample in one aggregate over :func:`_value_cdf`
+    (ca/cb here = inclusive cumulative counts; the only window runs
+    over DISTINCT values). The sum S = sum_v t_v*(ca*n0 - cb*n1)^2
+    accumulates exact DECIMAL(38,0) integers — order-independent,
+    one float division at the end, so the SQL oracle reproduces T
+    digit-for-digit. Exactness envelope: (ca*n0)^2 <= N^4/16, inside
     DECIMAL(38) for N up to ~2e9 rows per call (the spearman_corr
     n^4 envelope); at 10^12 scale apply per-slice or quantize first
     (CvM over a quantized value is CvM of the quantized ECDFs,
@@ -1215,38 +1177,13 @@ def cvm_two_sample(df: DataFrame, value_col: str, group_col: str
 
     Rows with NULL value or group are dropped. Output: one row
     (n_1, n_0, cvm) — NULL cvm when either group is empty."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    h = (
-        df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .groupBy(F.col(value_col).alias("__v"))
-        .agg(
-            F.sum(y).cast(dec).alias("__a"),
-            F.sum(1 - y).cast(dec).alias("__b"),
-        )
-    )
-    w_cum = W.orderBy("__v").rowsBetween(W.unboundedPreceding, 0)
-    c = h.select(
-        (F.col("__a") + F.col("__b")).alias("__t"),
-        F.sum("__a").over(w_cum).alias("__ca"),
-        F.sum("__b").over(w_cum).alias("__cb"),
-    )
-    tot = h.agg(
-        F.sum("__a").alias("__n1"), F.sum("__b").alias("__n0")
-    )
-    d = (
-        F.col("__ca") * F.col("__n0")
-        - F.col("__cb") * F.col("__n1")
-    )
-    g = (
-        c.crossJoin(F.broadcast(tot))
-        .agg(
-            F.first("__n1").alias("__n1"),
-            F.first("__n0").alias("__n0"),
-            F.sum(F.col("__t") * d * d).alias("__s"),
-        )
+    d = _cdf_gap()
+    g = _value_cdf(
+        _value_hist(df, F.col(value_col), group_col)
+    ).agg(
+        F.max("n1").alias("__n1"),
+        F.max("n0").alias("__n0"),
+        F.sum((F.col("a") + F.col("b")) * d * d).alias("__s"),
     )
     n1, n0 = F.col("__n1"), F.col("__n0")
     N = n1 + n0
@@ -2175,7 +2112,7 @@ def kuiper_two_sample(df: DataFrame, value_col: str, group_col: str
         D+ = sup_x (F_1 - F_0),   D- = sup_x (F_0 - F_1),
         V  = D+ + D-
 
-    evaluated on the same value-histogram collapse as
+    evaluated in one aggregate over :func:`_value_cdf`, like
     :func:`ks_two_sample`: the SIGNED exact integer cross-product
     s(v) = cum_1 * n_0 - cum_0 * n_1 makes D+ = max s / (n_1 n_0)
     and D- = -min s / (n_1 n_0) (both attained, the last value pins
@@ -2198,37 +2135,14 @@ def kuiper_two_sample(df: DataFrame, value_col: str, group_col: str
     Rows with NULL value or group are dropped. Output: one row
     (n_1, n_0, d_plus, d_minus, v, p_value, significant); NULL
     statistics when either group is empty."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    g = (
-        df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .groupBy(value_col)
-        .agg(
-            F.sum(y).cast(dec).alias("__a"),
-            F.sum(1 - y).cast(dec).alias("__b"),
-        )
-    )
-    w = W.orderBy(value_col).rowsBetween(W.unboundedPreceding, 0)
-    h = g.select(
-        F.sum("__a").over(w).alias("__ca"),
-        F.sum("__b").over(w).alias("__cb"),
-    )
-    tot = g.agg(
-        F.sum("__a").alias("__na"), F.sum("__b").alias("__nb")
-    )
-    s = F.col("__ca") * F.col("__nb") - F.col("__cb") * F.col(
-        "__na"
-    )
-    agg = (
-        h.crossJoin(F.broadcast(tot))
-        .agg(
-            F.first("__na").alias("__fa"),
-            F.first("__nb").alias("__fb"),
-            F.max(s).alias("__smax"),
-            F.min(s).alias("__smin"),
-        )
+    s = _cdf_gap()
+    agg = _value_cdf(
+        _value_hist(df, F.col(value_col), group_col)
+    ).agg(
+        F.max("n1").alias("__fa"),
+        F.max("n0").alias("__fb"),
+        F.max(s).alias("__smax"),
+        F.min(s).alias("__smin"),
     )
     na, nb = F.col("__fa"), F.col("__fb")
     prod = (na * nb).cast("double")
@@ -2489,87 +2403,50 @@ def youden_threshold(df: DataFrame, score_col: str, label_col: str
     whole ranking; a pipeline that FILTERS needs one cut, and the
     J-maximizing cut is the standard choice when both error types
     weigh equally). Rule: predict positive when score >= t,
-    evaluated at every distinct score value off the value histogram:
+    evaluated at every distinct score value of :func:`_value_cdf`:
 
         J(t) = TP_t / P - FP_t / N
              = (TP_t * N - FP_t * P) / (P * N)
 
+    with TP_t = P - ca and FP_t = N - cb (the rows at or above t).
     The argmax runs over the exact integer numerator
     TP_t * N - FP_t * P (DECIMAL(38,0), order-independent), ties ->
     the SMALLEST threshold (the most inclusive optimal cut,
-    deterministic); TPR / FPR / J / accuracy at the chosen cut are
-    single float divisions of exact integers.
+    deterministic), taken in the same aggregate; TPR / FPR / J /
+    accuracy at the chosen cut are single float divisions of exact
+    integers.
 
-    Scale shape: one map-side-combined groupBy(score); the only
-    window runs over distinct score values (the auc_exact shape).
-    Rows with NULL score or label are dropped. Output: one row
-    (n_pos, n_neg, threshold, j, tpr, fpr, accuracy); NULL when
-    either class is empty."""
-    dec = "decimal(38,0)"
-    y = F.col(label_col).cast("int")
-    h = (
-        df.where(
-            F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(y).cast(dec).alias("__p"),
-            F.sum(1 - y).cast(dec).alias("__q"),
-        )
-    )
-    wd = W.orderBy(F.col("__v").desc()).rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    cum = h.select(
-        "__v",
-        F.sum("__p").over(wd).alias("__tp"),
-        F.sum("__q").over(wd).alias("__fp"),
-    )
-    tot = h.agg(
-        F.sum("__p").alias("__P"), F.sum("__q").alias("__N")
-    )
-    scored = cum.crossJoin(F.broadcast(tot)).withColumn(
-        "__jn",
-        F.col("__tp") * F.col("__N") - F.col("__fp") * F.col("__P"),
-    )
-    best = scored.agg(F.max("__jn").alias("__jb"))
-    pick = (
-        scored.crossJoin(F.broadcast(best))
-        .where(F.col("__jn") == F.col("__jb"))
-        .agg(
-            F.min("__v").alias("threshold"),
-            F.first("__P").alias("__totp"),
-            F.first("__N").alias("__totn"),
-            F.first("__jb").alias("__jbest"),
-        )
-    )
-    at = (
-        pick.join(
-            scored.select(
-                F.col("__v").alias("threshold"),
-                "__tp",
-                "__fp",
-            ),
-            "threshold",
-        )
+    Scale shape: one aggregate over the distinct-score CDF (the
+    auc_exact shape). Rows with NULL score or label are dropped.
+    Output: one row (n_pos, n_neg, threshold, j, tpr, fpr,
+    accuracy); every column but n_pos / n_neg is NULL when either
+    class is empty, and all are NULL on an empty input."""
+    tp = F.col("n1") - F.col("ca")
+    fp = F.col("n0") - F.col("cb")
+    jn = tp * F.col("n0") - fp * F.col("n1")
+    at = _value_cdf(
+        _value_hist(df, F.col(score_col), label_col)
+    ).agg(
+        F.max("n1").alias("__totp"),
+        F.max("n0").alias("__totn"),
+        F.max(jn).alias("__jbest"),
+        F.min_by(
+            F.struct("v", tp.alias("tp"), fp.alias("fp")),
+            F.struct(-jn, F.col("v")),
+        ).alias("__at"),
     )
     P, N = F.col("__totp"), F.col("__totn")
+    tp, fp = F.col("__at.tp"), F.col("__at.fp")
     pn = (P * N).cast("double")
     ok = (P > 0) & (N > 0)
-    acc = (F.col("__tp") + (N - F.col("__fp"))).cast("double") / (
-        P + N
-    ).cast("double")
+    acc = (tp + (N - fp)).cast("double") / (P + N).cast("double")
     return at.select(
         P.cast("bigint").alias("n_pos"),
         N.cast("bigint").alias("n_neg"),
-        F.when(ok, F.col("threshold")).alias("threshold"),
+        F.when(ok, F.col("__at.v")).alias("threshold"),
         F.when(ok, F.col("__jbest").cast("double") / pn).alias("j"),
-        F.when(
-            ok, F.col("__tp").cast("double") / P.cast("double")
-        ).alias("tpr"),
-        F.when(
-            ok, F.col("__fp").cast("double") / N.cast("double")
-        ).alias("fpr"),
+        F.when(ok, tp.cast("double") / P.cast("double")).alias("tpr"),
+        F.when(ok, fp.cast("double") / N.cast("double")).alias("fpr"),
         F.when(ok, acc).alias("accuracy"),
     )
 
@@ -2658,60 +2535,33 @@ def average_precision(
 
     over DISTINCT score values descending (ties enter as one block
     — the tie-correct form), with P_k = TP_k / (TP_k + FP_k),
-    R_k = TP_k / P. Every TP/FP is an exact integer off the
-    score-value histogram's descending cumulative; each threshold's
-    term (dTP_k / P) * P_k is quantized to integer 1/``unit`` units
-    BEFORE the cross-threshold sum (house rule), so the result is
-    order-independent and SQL-replayable.
+    R_k = TP_k / P. Every TP/FP is an exact integer off
+    :func:`_value_cdf` (the descending count TP_k = P - ca); each
+    threshold's term (dTP_k / P) * P_k is quantized to integer
+    1/``unit`` units BEFORE the cross-threshold sum (house rule), so
+    the result is order-independent and SQL-replayable.
 
-    Scale shape: one map-side-combined groupBy(score); the only
-    window runs over distinct score values. Rows with NULL score or
-    label are dropped. Output: one row (n_pos, n_neg, ap,
-    baseline) — baseline = P/(P+N), the AP of a random ranking;
+    Scale shape: one aggregate over the distinct-score CDF. Rows with
+    NULL score or label are dropped. Output: one row (n_pos, n_neg,
+    ap, baseline) — baseline = P/(P+N), the AP of a random ranking;
     ap NULL when there are no positives."""
-    dec = "decimal(38,0)"
-    y = F.col(label_col).cast("int")
-    h = (
-        df.where(
-            F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(y).cast(dec).alias("__p"),
-            F.sum(1 - y).cast(dec).alias("__q"),
-        )
-    )
-    wd = W.orderBy(F.col("__v").desc()).rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    cum = h.select(
-        F.col("__p").alias("__dp"),
-        F.sum("__p").over(wd).alias("__tp"),
-        F.sum("__q").over(wd).alias("__fp"),
-    )
-    tot = h.agg(
-        F.sum("__p").alias("__P"), F.sum("__q").alias("__N")
-    )
+    tp = F.col("n1") - F.col("ca")
+    fp = F.col("n0") - F.col("cb")
     u = F.lit(float(unit))
     term = (
-        F.col("__dp").cast("double")
-        / F.col("__P").cast("double")
-    ) * (
-        F.col("__tp").cast("double")
-        / (F.col("__tp") + F.col("__fp")).cast("double")
+        F.col("a").cast("double") / F.col("n1").cast("double")
+    ) * (tp.cast("double") / (tp + fp).cast("double"))
+    agg = _value_cdf(
+        _value_hist(df, F.col(score_col), label_col)
+    ).agg(
+        F.max("n1").alias("__P"),
+        F.max("n0").alias("__N"),
+        F.sum(
+            F.when(F.col("a") > 0, F.floor(term * u).cast(_DEC))
+        ).alias("__su"),
     )
-    agg = (
-        cum.crossJoin(F.broadcast(tot))
-        .where(F.col("__dp") > 0)
-        .agg(
-            F.first("__P").alias("__fp_"),
-            F.first("__N").alias("__fn_"),
-            F.sum(F.floor(term * u).cast(dec)).alias("__su"),
-        )
-    )
-    base = tot.crossJoin(F.broadcast(agg.drop("__fp_", "__fn_")))
     ok = F.col("__P") > 0
-    return base.select(
+    return agg.select(
         F.col("__P").cast("bigint").alias("n_pos"),
         F.col("__N").cast("bigint").alias("n_neg"),
         F.when(
@@ -2997,34 +2847,22 @@ def distribution_distances(
     integer 1/``unit`` units before the cross-value sum (house
     rule), normalized once by sqrt(n_1 n_0); H is one float of BC
     (clamped at 0 against quantization). All off the shared value
-    histogram — one groupBy, no window at all.
+    histogram (:func:`_value_hist`) — one groupBy and its broadcast
+    totals, no window at all.
 
     Rows with NULL value or group are dropped. Output: one row
     (n_1, n_0, tvd, bc, hellinger); NULL when either group is
     empty."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    h = (
-        df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .groupBy(F.col(value_col).alias("__v"))
-        .agg(
-            F.sum(y).cast(dec).alias("__a"),
-            F.sum(1 - y).cast(dec).alias("__b"),
-        )
-    )
-    tot = h.agg(
-        F.sum("__a").alias("__na"), F.sum("__b").alias("__nb")
-    )
+    h = _value_hist(df, F.col(value_col), group_col)
+    tot = h.agg(F.sum("a").alias("__na"), F.sum("b").alias("__nb"))
     u = F.lit(float(unit))
     j = h.crossJoin(F.broadcast(tot))
     tvd_term = F.abs(
-        F.col("__a") * F.col("__nb") - F.col("__b") * F.col("__na")
+        F.col("a") * F.col("__nb") - F.col("b") * F.col("__na")
     )
     bc_term = F.floor(
-        F.sqrt((F.col("__a") * F.col("__b")).cast("double")) * u
-    ).cast(dec)
+        F.sqrt((F.col("a") * F.col("b")).cast("double")) * u
+    ).cast(_DEC)
     agg = j.agg(
         F.first("__na").alias("__fa"),
         F.first("__nb").alias("__fb"),
@@ -3034,7 +2872,7 @@ def distribution_distances(
     na, nb = F.col("__fa"), F.col("__fb")
     ok = (na > 0) & (nb > 0)
     tvd = F.col("__tv").cast("double") / (
-        F.lit(2).cast(dec) * na * nb
+        F.lit(2).cast(_DEC) * na * nb
     ).cast("double")
     bc = (
         F.col("__bc").cast("double")
@@ -3302,16 +3140,17 @@ def energy_distance(
     with the U/V-statistic normalization the permutation-test
     literature uses.
 
-    All three pair sums are EXACT DECIMAL(38,0) integers off the
-    value histogram — never an O(n^2) pair join: with prefix sums
-    over distinct values v (ascending), SA = cum count, SAV = cum
-    count*value below v,
+    All three pair sums are EXACT DECIMAL(38,0) integers off
+    :func:`_value_cdf` of the BIGINT-cast value — never an O(n^2)
+    pair join: with prefix sums over distinct values v (ascending),
+    SA = cum count, SAV = cum count*value below v,
 
         sum_{pairs} |x - y| = sum_v a_v (v * SB_v - SBV_v)
                             + sum_v b_v (v * SA_v - SAV_v)
 
     (ties contribute 0), and within-group sums reuse the same
-    window. The only non-integer step is the three final divisions:
+    window; SAV/SBV are two extra prefix sums on the CDF's window.
+    The only non-integer step is the three final divisions:
     A = Pab/(n1 n0), B = 2 Paa/n1^2, C = 2 Pbb/n0^2 (V-statistic
     convention: |x-x| self-pairs count as 0 in the n^2
     denominator), combined in one float tree identical in the SQL
@@ -3321,46 +3160,20 @@ def energy_distance(
 
     Rows with NULL value or group are dropped. Output: ONE row
     (n_1, n_0, e_dist, t_stat); NULL when either group is empty."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    v = F.col(value_col).cast("bigint")
-    h = (
-        df.where(v.isNotNull() & F.col(group_col).isNotNull())
-        .groupBy(v.alias("v"))
-        .agg(
-            F.sum(y).cast(dec).alias("a"),
-            F.sum(1 - y).cast(dec).alias("b"),
-        )
-    )
-    w_cum = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
-    zero = F.lit(0).cast(dec)
-    vd = F.col("v").cast(dec)
-    cum = h.select(
-        "v",
-        "a",
-        "b",
-        F.coalesce(F.sum("a").over(w_cum), zero).alias("__sa"),
-        F.coalesce(F.sum("b").over(w_cum), zero).alias("__sb"),
-        F.coalesce(F.sum(vd * F.col("a")).over(w_cum), zero).alias(
-            "__sav"
-        ),
-        F.coalesce(F.sum(vd * F.col("b")).over(w_cum), zero).alias(
-            "__sbv"
-        ),
-    )
-    g = cum.agg(
-        F.sum("a").alias("__n1"),
-        F.sum("b").alias("__n0"),
-        F.sum(
-            F.col("a") * (vd * F.col("__sb") - F.col("__sbv"))
-            + F.col("b") * (vd * F.col("__sa") - F.col("__sav"))
-        ).alias("__pab"),
-        F.sum(
-            F.col("a") * (vd * F.col("__sa") - F.col("__sav"))
-        ).alias("__paa"),
-        F.sum(
-            F.col("b") * (vd * F.col("__sb") - F.col("__sbv"))
-        ).alias("__pbb"),
+    vd = F.col("v").cast(_DEC)
+    a, b = F.col("a"), F.col("b")
+    ia = vd * F.col("ca") - F.col("sav")  # sum_{x < v, group 1} (v - x)
+    ib = vd * F.col("cb") - F.col("sbv")
+    g = _value_cdf(
+        _value_hist(df, F.col(value_col).cast("bigint"), group_col),
+        sav=vd * a,
+        sbv=vd * b,
+    ).agg(
+        F.max("n1").alias("__n1"),
+        F.max("n0").alias("__n0"),
+        F.sum(a * ib + b * ia).alias("__pab"),
+        F.sum(a * ia).alias("__paa"),
+        F.sum(b * ib).alias("__pbb"),
     )
     n1, n0 = F.col("__n1"), F.col("__n0")
     n1d, n0d = n1.cast("double"), n0.cast("double")
@@ -3513,7 +3326,9 @@ def ad_two_sample(
     The k = 2 statistic collapses to a single exact term per
     distinct value: with DB_j = 2 B_j (doubled midrank pooled
     count), DM_j = 2 M_1j (doubled group-1 count), both exact
-    integers off the value histogram, the two group terms are equal
+    integers off :func:`_value_cdf` of the BIGINT-cast value
+    (DB_j = 2 (ca + cb) + l_j, DM_j = 2 ca + a_j), the two group
+    terms are equal
     (N DM - n1 DB = -(N DM0 - n0 DB)), so
 
         A^2 = (N-1)/N * sum_j l_j E_j^2 / (n1 n0 den_j),
@@ -3532,45 +3347,16 @@ def ad_two_sample(
 
     Rows with NULL value or group are dropped. Output: ONE row
     (n_1, n_0, a2, significant); NULL when either group is empty."""
-    dec = "decimal(38,0)"
-    y = F.col(group_col).cast("int")
-    v = F.col(value_col).cast("bigint")
-    h = (
-        df.where(v.isNotNull() & F.col(group_col).isNotNull())
-        .groupBy(v.alias("v"))
-        .agg(
-            F.sum(y).cast(dec).alias("a"),
-            F.sum(1 - y).cast(dec).alias("b"),
-        )
-        .withColumn("l", F.col("a") + F.col("b"))
-    )
+    dec = _DEC
     zero = F.lit(0).cast(dec)
-    w_cum = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
-    cum = h.select(
-        "v",
-        "a",
-        "l",
-        (
-            F.lit(2).cast(dec)
-            * F.coalesce(F.sum("l").over(w_cum), zero)
-            + F.col("l")
-        ).alias("__db"),
-        (
-            F.lit(2).cast(dec)
-            * F.coalesce(F.sum("a").over(w_cum), zero)
-            + F.col("a")
-        ).alias("__dm"),
-    )
-    tot = h.agg(
-        F.sum("a").alias("__n1"), F.sum("b").alias("__n0")
-    )
-    j = cum.crossJoin(F.broadcast(tot))
-    n1, n0 = F.col("__n1"), F.col("__n0")
+    two = F.lit(2).cast(dec)
+    l = F.col("a") + F.col("b")
+    db = two * (F.col("ca") + F.col("cb")) + l
+    dm = two * F.col("ca") + F.col("a")
+    n1, n0 = F.col("n1"), F.col("n0")
     nn = n1 + n0
-    e = nn * F.col("__dm") - n1 * F.col("__db")
-    den = F.col("__db") * (
-        F.lit(2).cast(dec) * nn - F.col("__db")
-    ) - nn * F.col("l")
+    e = nn * dm - n1 * db
+    den = db * (two * nn - db) - nn * l
     # ANSI-safe: the when(den > 0) guard below does NOT protect the
     # division — codegen hoists it as a common subexpression — so the
     # divisor itself is NULL whenever it would be 0 (house rule from
@@ -3579,14 +3365,16 @@ def ad_two_sample(
         "double"
     )
     contrib = (
-        F.col("l").cast("double")
+        l.cast("double")
         * e.cast("double")
         * e.cast("double")
         / F.when(prod > 0, prod)
     )
-    g = j.agg(
-        F.min("__n1").alias("__n1"),
-        F.min("__n0").alias("__n0"),
+    g = _value_cdf(
+        _value_hist(df, F.col(value_col).cast("bigint"), group_col)
+    ).agg(
+        F.max("n1").alias("__n1"),
+        F.max("n0").alias("__n0"),
         F.sum(
             F.when(
                 den > 0,

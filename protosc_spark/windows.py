@@ -3971,7 +3971,8 @@ def time_decay_features(
             v.alias("v"),
         ).alias("__t"),
     )
-    out_t = "array<struct<o:int,dc:double,dv:double>>"
+    o_t = tr.schema[order_col].dataType.simpleString()
+    out_t = f"array<struct<o:{o_t},dc:double,dv:double>>"
 
     def _step(st, x):
         decay = F.exp(-F.lit(lam) * (x["us"] - st["us"]).cast("double"))

@@ -834,17 +834,31 @@ def test_cvm_identical_zero_and_degenerate(spark):
     assert r.n_1 == 0 and r.cvm is None
 
 
-def test_mwu_cvm_plan_no_python(spark):
-    from protosc_spark.evaluation import cvm_two_sample, mannwhitney_u
+_VALUE_CDF_FAMILY = (
+    "auc_exact", "ks_two_sample", "wasserstein_by_group",
+    "mannwhitney_u", "cvm_two_sample", "kuiper_two_sample",
+    "youden_threshold", "average_precision", "energy_distance",
+    "ad_two_sample",
+)
+
+
+@pytest.mark.parametrize(
+    "fn", _VALUE_CDF_FAMILY + ("distribution_distances",)
+)
+def test_value_hist_family_plan(spark, fn):
+    """Plans only (no job runs): the family is pure JVM, and every
+    ordered statistic takes its totals from the CDF window, so its
+    plan joins nothing back."""
+    from protosc_spark import evaluation
 
     df = spark.createDataFrame([(1, 1), (2, 0)], "v long, g int")
-    for out in (
-        mannwhitney_u(df, "v", "g"),
-        cvm_two_sample(df, "v", "g"),
-    ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan
-        assert "BatchEvalPython" not in plan
+    out = getattr(evaluation, fn)(df, "v", "g")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+    if fn in _VALUE_CDF_FAMILY:
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -1995,6 +2009,17 @@ def test_youden_tie_and_degenerate(spark):
     df = spark.createDataFrame([(1, 1), (2, 1)], "s long, y int")
     r = youden_threshold(df, "s", "y").collect()[0]
     assert r.j is None and r.threshold is None
+
+
+def test_youden_empty_frame_one_null_row(spark):
+    """Like the rest of the two-sample family, an empty input gives
+    one row with every column NULL, not zero rows."""
+    from protosc_spark.evaluation import youden_threshold
+
+    df = spark.createDataFrame([], "s long, y int")
+    rows = youden_threshold(df, "s", "y").collect()
+    assert len(rows) == 1
+    assert all(x is None for x in rows[0])
 
 
 # ---------------------------------------------------------------------------

@@ -3107,6 +3107,24 @@ def test_time_decay_null_values_contribute_zero(spark):
     assert out[1]["decayed_value"] is not None
 
 
+def test_time_decay_bigint_order_col(spark):
+    """The order column keeps its own type: a BIGINT turn index
+    (row_number()'s type) folds like an INT one."""
+    import datetime as dt
+
+    from protosc_spark.windows import time_decay_features
+
+    t0 = dt.datetime(2025, 1, 1)
+    df = spark.createDataFrame(
+        [("c", 0, t0), ("c", 1, t0 + dt.timedelta(seconds=3600))],
+        "conv_id string, turn_idx bigint, ts timestamp",
+    )
+    out = time_decay_features(df, half_life_s=3600.0)
+    assert out.schema["turn_idx"].dataType.simpleString() == "bigint"
+    got = {r.turn_idx: r.decayed_count for r in out.collect()}
+    assert got[0] == 0.0 and abs(got[1] - 0.5) < 1e-12
+
+
 def test_time_decay_custom_entity_and_order_cols(spark, events):
     """Kernel generality: entity/order/ts column names are
     parameters (the events gate uses user_id/rank), and the fold's
