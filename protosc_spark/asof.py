@@ -7,18 +7,23 @@ visible at that turn; zero temporal leakage). Entities with no prior
 update get null (backfill-null). Value columns are carried
 ROW-ATOMICALLY: all output values come from that single most recent
 right row, so a NULL field in it stays NULL (no per-column backfill
-from older rows) — identical across all three kernels.
+from older rows). A right row whose ts is NULL has no known time, so
+it is never in the strict past of any turn and is dropped (pandas
+``merge_asof`` refuses NULL keys outright).
 
-Spark has no native as-of join; two implementations:
+Spark has no native as-of join. One kernel, :func:`_asof`, does the
+work: left and right rows are unioned with a source tag, each right
+row's values travel as ONE struct, and a per-entity ordered window
+carries the latest struct forward with ``last(ignorenulls)``
+— one shuffle on the entity key, fully JVM-side (whole-stage codegen,
+no Python), skew handled by AQE. Three entry points call it:
 
-* :func:`asof_join` — the default. Union-tag + window ``last(value,
-  ignorenulls=True)``: one shuffle on the entity key, fully JVM-side
-  (whole-stage codegen, no Python), skew handled by AQE. Right rows at
-  equal ts sort AFTER left rows, which is exactly the strict-< rule.
-* :func:`asof_join_grouped` — sort-merge kernel via cogrouped
-  ``applyInPandas`` + ``pandas.merge_asof`` per salt bucket of
-  conversations. Demonstrates the grouped-kernel escape hatch for
-  semantics windows can't express (nearest / tolerance / forward).
+* :func:`asof_join` — one update stream, output columns unprefixed;
+* :func:`asof_snapshot` — K named update streams in one window pass,
+  output columns ``{stream}_{col}``;
+* :func:`asof_join_time_split` — the skew path: partitions by (entity,
+  time bucket) and builds the cross-bucket carry-in with
+  :func:`asof_join` at bucket granularity.
 
 The reference has no join of any kind (label alignment is positional,
 reference examples/nimstim.py:74-83); this operator comes from the
@@ -27,14 +32,128 @@ north rule.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-import pandas as pd
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
+
+from protosc_spark.windows import _epoch_us
+
+
+def _asof(
+    left: DataFrame,
+    rights: dict[str, DataFrame],
+    on: str,
+    by: list[str],
+    value_cols: dict[str, list[str]],
+    allow_exact_matches: bool,
+    tolerance_seconds: dict[str, float],
+    out_name: Callable[[str, str], str],
+) -> DataFrame:
+    """The union-tag carry kernel behind every public as-of join.
+
+    Stream ``nm`` of ``rights`` contributes ``value_cols[nm]``, output
+    as ``out_name(nm, col)``; a stream in ``tolerance_seconds`` has its
+    match nulled row-atomically once it is staler than that bound.
+
+    Tag: left rows get ``__src=0``, right rows ``1``, and the window
+    orders by ``(ts, __src)``: at equal ts a right row sorts after the
+    left row, so it is invisible (strict past). With exact matches
+    allowed, right rows get ``-1`` and sort first. Each stream's values
+    ride in their own struct column ``__v_i`` (NULL on every other
+    row), so the K carries share one sort, and ``last(ignorenulls)``
+    carries the latest row of each stream atomically. The structs are
+    also the last sort keys, so duplicate right rows at the same
+    (entity, ts) resolve to the lexicographically largest value row at
+    any parallelism.
+    """
+    names = list(rights)
+    right_src = -1 if allow_exact_matches else 1
+
+    def _fields(nm: str) -> list[tuple[str, str]]:
+        # (struct field, source column). The matched right ts rides LAST
+        # for the tolerance check, so the duplicate-row tiebreak still
+        # compares the value columns first (rows tied on (by, ts) share
+        # __rts).
+        return [(c, c) for c in value_cols[nm]] + (
+            [("__rts", on)] if nm in tolerance_seconds else []
+        )
+
+    vtypes = {
+        nm: T.StructType(
+            [
+                T.StructField(f, rights[nm].schema[src].dataType, True)
+                for f, src in _fields(nm)
+            ]
+        )
+        for nm in names
+    }
+    lhs = left.select(
+        *by,
+        F.col(on).alias("__ts"),
+        F.lit(0).alias("__src"),
+        F.struct(*left.columns).alias("__row"),
+        *[
+            F.lit(None).cast(vtypes[nm]).alias(f"__v_{i}")
+            for i, nm in enumerate(names)
+        ],
+    )
+    unioned = lhs
+    for i, nm in enumerate(names):
+        unioned = unioned.unionByName(
+            rights[nm]
+            .where(F.col(on).isNotNull())
+            .select(
+                *by,
+                F.col(on).alias("__ts"),
+                F.lit(right_src).alias("__src"),
+                F.lit(None).cast(lhs.schema["__row"].dataType).alias("__row"),
+                *[
+                    (
+                        F.struct(*[F.col(src).alias(f) for f, src in _fields(nm)])
+                        if j == i
+                        else F.lit(None).cast(vtypes[n2])
+                    ).alias(f"__v_{j}")
+                    for j, n2 in enumerate(names)
+                ],
+            )
+        )
+
+    w = (
+        W.partitionBy(*by)
+        .orderBy(
+            F.col("__ts").asc(),
+            F.col("__src").asc(),
+            *[F.col(f"__v_{i}").asc_nulls_first() for i in range(len(names))],
+        )
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    filled = unioned.select(
+        "__row",
+        *[
+            F.last(F.col(f"__v_{i}"), ignorenulls=True).over(w).alias(f"__f_{i}")
+            for i in range(len(names))
+        ],
+    ).where(F.col("__row").isNotNull())
+
+    out = [F.col(f"__row.{c}").alias(c) for c in left.columns]
+    for i, nm in enumerate(names):
+        vals = [(F.col(f"__f_{i}.{c}"), out_name(nm, c)) for c in value_cols[nm]]
+        if nm in tolerance_seconds:
+            fresh = F.col(f"__f_{i}.__rts").isNotNull() & (
+                _epoch_us(F.col(f"__row.{on}"))
+                - _epoch_us(F.col(f"__f_{i}.__rts"))
+                <= F.lit(int(tolerance_seconds[nm] * 1_000_000)).cast("long")
+            )
+            vals = [(F.when(fresh, v), o) for v, o in vals]
+        out += [v.alias(o) for v, o in vals]
+    return filled.select(*out)
+
+
+def _value_cols(right: DataFrame, on: str, by: list[str]) -> list[str]:
+    return [c for c in right.columns if c not in set(by) | {on}]
 
 
 def asof_join(
@@ -46,7 +165,7 @@ def asof_join(
     allow_exact_matches: bool = False,
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
-    """Backward as-of join, window implementation (the scale path).
+    """Backward as-of join against one update stream.
 
     ``left`` keeps all its columns; for each name in ``value_cols``
     (default: every right column not in the key) a column with the
@@ -60,164 +179,16 @@ def asof_join(
     extra shuffle: same one-exchange plan, one extra comparison.
     """
     by = [by] if isinstance(by, str) else list(by)
-    value_cols = list(
-        value_cols
-        if value_cols is not None
-        else [c for c in right.columns if c not in set(by) | {on}]
-    )
-
-    # Tag: left rows get __src=0, right rows __src=1. Order by (ts, __src):
-    # at equal ts the right row sorts after the left row => invisible when
-    # allow_exact_matches=False. With exact matches allowed, right sorts
-    # first (__src flipped).
-    #
-    # The right row's value columns travel as ONE struct (null struct on
-    # left rows), so `last(ignorenulls)` carries the latest right ROW
-    # atomically: a NULL inside the most recent update stays NULL in the
-    # output instead of backfilling per column from an older row — the
-    # same row semantics as the merge_asof kernels (pinned in
-    # tests/test_asof.py on a null-valued update).
-    right_src = 1 if not allow_exact_matches else -1
-    vrow_fields = [
-        T.StructField(c, right.schema[c].dataType, True) for c in value_cols
-    ]
-    if tolerance_seconds is not None:
-        vrow_fields.append(
-            T.StructField("__rts", right.schema[on].dataType, True)
-        )
-    vrow_type = T.StructType(vrow_fields)
-    lhs = left.select(
-        *by,
-        F.col(on).alias("__ts"),
-        F.lit(0).alias("__src"),
-        F.struct(*left.columns).alias("__row"),
-        F.lit(None).cast(vrow_type).alias("__vrow"),
-    )
-    rhs = right.select(
-        *by,
-        F.col(on).alias("__ts"),
-        F.lit(right_src).alias("__src"),
-        F.lit(None).cast(lhs.schema["__row"].dataType).alias("__row"),
-        F.struct(
-            *[F.col(c) for c in value_cols],
-            # matched-right-ts rider for the tolerance check; placed
-            # LAST so the duplicate-row tiebreak still compares the
-            # value columns first (rows tied on (by, ts) share __rts)
-            *([F.col(on).alias("__rts")] if tolerance_seconds is not None
-              else []),
-        ).alias("__vrow"),
-    )
-    unioned = lhs.unionByName(rhs)
-
-    # Tiebreak on the value struct (lexicographic over the value
-    # columns) so duplicate right rows at the same (by, ts) resolve
-    # identically at any parallelism.
-    w = (
-        W.partitionBy(*by)
-        .orderBy(
-            F.col("__ts").asc(),
-            F.col("__src").asc(),
-            F.col("__vrow").asc_nulls_first(),
-        )
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    filled = unioned.select(
-        "__row",
-        F.last(F.col("__vrow"), ignorenulls=True).over(w).alias("__f"),
-    ).where(F.col("__row").isNotNull())
-
-    if tolerance_seconds is None:
-        return filled.select(
-            *[F.col(f"__row.{c}").alias(c) for c in left.columns],
-            *[F.col(f"__f.{c}").alias(c) for c in value_cols],
-        )
-    from protosc_spark.windows import _epoch_us
-
-    fresh = F.col("__f.__rts").isNotNull() & (
-        _epoch_us(F.col(f"__row.{on}")) - _epoch_us(F.col("__f.__rts"))
-        <= F.lit(int(tolerance_seconds * 1_000_000)).cast("long")
-    )
-    return filled.select(
-        *[F.col(f"__row.{c}").alias(c) for c in left.columns],
-        *[
-            F.when(fresh, F.col(f"__f.{c}")).alias(c)
-            for c in value_cols
-        ],
-    )
-
-
-def asof_join_grouped(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "conv_id",
-    value_cols: Sequence[str] | None = None,
-    allow_exact_matches: bool = False,
-    n_buckets: int = 64,
-    tolerance_seconds: float | None = None,
-) -> DataFrame:
-    """Backward as-of join via cogrouped ``pandas.merge_asof`` kernel.
-
-    Both sides are cogrouped on a deterministic salt bucket of the
-    entity (``pmod(xxhash64(by), n_buckets)``) so one Arrow batch holds
-    many conversations; inside the kernel ``merge_asof(by=<entity>)``
-    does a per-conversation sort-merge. Exactly one shuffle per side.
-
-    Known limit (documented, inherent to by-key kernels): a single
-    conversation larger than executor memory needs time-range splitting
-    with carry-in of the last pre-boundary right row; the window
-    implementation (:func:`asof_join`) has no such limit and is the
-    default.
-    """
-    value_cols = list(
-        value_cols
-        if value_cols is not None
-        else [c for c in right.columns if c not in {by, on}]
-    )
-    left_cols = list(left.columns)
-    # build a fresh StructType — StructType.add mutates in place and
-    # left.schema is a cached object on the DataFrame
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [T.StructField(c, right.schema[c].dataType, True) for c in value_cols]
-    )
-
-    lb = left.withColumn("__b", F.pmod(F.xxhash64(F.col(by)), F.lit(n_buckets)))
-    rb = right.withColumn("__b", F.pmod(F.xxhash64(F.col(by)), F.lit(n_buckets)))
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.drop(columns="__b").sort_values(on, kind="mergesort")
-        rpdf = (
-            rpdf.drop(columns="__b")[[by, on] + value_cols]
-            # value tiebreak (nulls first) so duplicate (by, ts) right
-            # rows resolve to the same row as the window implementation
-            # at any parallelism; merge_asof picks the sort-last row
-            .sort_values([on] + value_cols, kind="mergesort", na_position="first")
-            .drop_duplicates([by, on], keep="last")
-        )
-        if len(lpdf) == 0:
-            return lpdf.reindex(columns=left_cols + value_cols)
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf,
-            on=on,
-            by=by,
-            direction="backward",
-            allow_exact_matches=allow_exact_matches,
-            # same inclusive staleness rule as asof_join's
-            # tolerance_seconds (left.ts - right.ts <= tol keeps)
-            tolerance=(
-                pd.Timedelta(seconds=tolerance_seconds)
-                if tolerance_seconds is not None
-                else None
-            ),
-        )
-        return merged[left_cols + value_cols]
-
-    return (
-        lb.groupBy("__b")
-        .cogroup(rb.groupBy("__b"))
-        .applyInPandas(merge, schema=out_schema)
+    return _asof(
+        left,
+        {"": right},
+        on,
+        by,
+        {"": list(value_cols if value_cols is not None
+                  else _value_cols(right, on, by))},
+        allow_exact_matches,
+        {} if tolerance_seconds is None else {"": tolerance_seconds},
+        lambda nm, c: c,
     )
 
 
@@ -238,31 +209,20 @@ def asof_join_time_split(
     so a single giant conversation spreads over ``duration /
     split_seconds`` independent partitions. Correctness across bucket
     boundaries: for every (entity, left bucket) the latest right row
-    from any EARLIER bucket is computed with one window pass over
-    per-bucket right maxima (one tiny row per (entity, bucket)) and
-    injected into the bucket as a synthetic right row — the "carry the
-    last pre-boundary state row into the next bucket" design from
-    SURVEY.md §7.3. Inside each (entity, bucket), the merge is the
-    SAME fully-JVM union-tag + ``last(ignorenulls)`` window as
-    :func:`asof_join`, just at (entity, bucket) granularity.
-
-    (Until round 4 the in-bucket merge was a cogrouped pandas
-    ``merge_asof`` kernel over (bucket, salt) groups; profiling at
-    sf0.1 showed 90% of its 5.1 s wall was per-group Arrow/pandas
-    fixed cost on thousands of tiny groups — the carry pass was
-    0.4 s. Replacing the kernel with the JVM window removed the
-    Python stage entirely; see BENCH/BASELINE.md round-4 note.)
+    from any EARLIER bucket is found by :func:`asof_join` at bucket
+    granularity (keys: the distinct left (entity, bucket) pairs; right
+    side: one latest row per (entity, bucket)) and injected into the
+    bucket as a synthetic right row — the "carry the last pre-boundary
+    state row into the next bucket" design from SURVEY.md §7.3. Inside
+    each (entity, bucket), the merge is :func:`asof_join` partitioned
+    by (entity, bucket).
 
     Equality with :func:`asof_join` for every split_seconds is pinned
     in tests/test_asof.py.
     """
     value_cols = list(
-        value_cols
-        if value_cols is not None
-        else [c for c in right.columns if c not in {by, on}]
+        value_cols if value_cols is not None else _value_cols(right, on, [by])
     )
-    from protosc_spark.windows import _epoch_us  # NTZ-safe microseconds
-
     us = F.lit(int(split_seconds) * 1_000_000)
 
     def _bucketed(df: DataFrame) -> DataFrame:
@@ -271,13 +231,16 @@ def asof_join_time_split(
         )
 
     lb = _bucketed(left)
-    rb = _bucketed(right.select(by, on, *value_cols))
+    rb = _bucketed(
+        right.select(by, on, *value_cols).where(F.col(on).isNotNull())
+    )
 
-    # --- carry-in: latest right row of any earlier bucket, per (by, left
-    # bucket). Stage 1: per-(by, right-bucket) latest row (deterministic
-    # value tiebreak). Stage 2: union with the distinct left bucket keys
-    # and run the same tag-and-backfill window as asof_join, but at
-    # BUCKET granularity (one row per (entity, bucket) — negligible).
+    # carry-in: the latest right row of any earlier bucket, per (entity,
+    # left bucket). The per-bucket latest row (deterministic value
+    # tiebreak) travels as ONE struct with its ts, so a NULL inside it
+    # is carried as NULL, never backfilled from an older row, and the
+    # strict-past rule on __t makes a bucket's row visible only to later
+    # buckets.
     w_last = W.partitionBy(by, "__t").orderBy(
         F.col(on).desc(),
         *[F.col(c).desc_nulls_last() for c in value_cols],
@@ -285,71 +248,36 @@ def asof_join_time_split(
     rlast = (
         rb.withColumn("__rn", F.row_number().over(w_last))
         .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    lkeys = lb.select(by, "__t").distinct()
-    # Carry the latest earlier-bucket right row as ONE struct (ts +
-    # every value column together), so a NULL inside the latest row is
-    # carried as NULL rather than per-column backfilled from an older
-    # row — keeping the carry path row-atomic like the in-bucket
-    # merge_asof (round-1 ADVICE: the two paths disagreed on nullable
-    # value columns).
-    crow_type = T.StructType(
-        [T.StructField("__cts", right.schema[on].dataType, True)]
-        + [T.StructField(c, right.schema[c].dataType, True) for c in value_cols]
-    )
-    carry_union = lkeys.select(
-        by,
-        "__t",
-        F.lit(0).alias("__src"),
-        F.lit(None).cast(crow_type).alias("__crow"),
-    ).unionByName(
-        rlast.select(
-            by,
-            "__t",
-            F.lit(1).alias("__src"),
-            F.struct(
-                F.col(on).alias("__cts"),
-                *[F.col(c) for c in value_cols],
-            ).alias("__crow"),
-        )
-    )
-    # right row in bucket t is visible to left buckets > t only: at equal
-    # bucket the right row sorts AFTER the left key row.
-    w_carry = (
-        W.partitionBy(by)
-        .orderBy(F.col("__t").asc(), F.col("__src").asc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    carry = (
-        carry_union.select(
-            by,
-            "__t",
-            "__src",
-            F.last("__crow", ignorenulls=True).over(w_carry).alias("__cf"),
-        )
-        .where((F.col("__src") == 0) & F.col("__cf").isNotNull())
         .select(
             by,
             "__t",
-            F.col("__cf.__cts").alias(on),
-            *[F.col(f"__cf.{c}").alias(c) for c in value_cols],
+            F.struct(F.col(on).alias("__cts"), *value_cols).alias("__crow"),
+        )
+    )
+    carry = (
+        asof_join(
+            lb.select(by, "__t").distinct(),
+            rlast,
+            on="__t",
+            by=by,
+            value_cols=["__crow"],
+        )
+        .where(F.col("__crow").isNotNull())
+        .select(
+            by,
+            "__t",
+            F.col("__crow.__cts").alias(on),
+            *[F.col(f"__crow.{c}").alias(c) for c in value_cols],
         )
     )
     # synthetic right rows land in the LEFT bucket they serve; their ts is
     # the original update ts (< bucket start by construction), so they
     # sort before every in-bucket left row and never tie an in-bucket
-    # right row.
-    rhs_all = rb.unionByName(carry)
-
-    # In-bucket merge: asof_join partitioned by (entity, bucket) — one
-    # exchange on the split key, zero Python. Same strict-< / tie rules;
-    # tolerance also passes straight through, because carry rows keep
-    # their ORIGINAL update ts (< bucket start), so the staleness check
-    # measures true update age across bucket boundaries too.
+    # right row. Tolerance passes straight through for the same reason:
+    # the staleness check measures true update age across buckets too.
     return asof_join(
         lb,
-        rhs_all,
+        rb.unionByName(carry),
         on=on,
         by=[by, "__t"],
         value_cols=value_cols,
@@ -372,17 +300,11 @@ def asof_snapshot(
     strictly-earlier row of EACH named stream, with one shuffle and
     one sort where K separate :func:`asof_join` calls would pay K.
 
-    Mechanics are the proven union-tag shape: every stream's row
-    travels as its own nullable struct column (null on rows from
-    other sources), the single per-entity ordered window runs K
-    ``last(ignorenulls)`` carries side by side, and each stream's
-    carry is ROW-ATOMIC (a NULL inside a stream's latest update stays
-    NULL — never per-column backfilled from an older row). Equal-ts
-    visibility and the duplicate-row struct tiebreak match
-    :func:`asof_join` exactly (pinned: K-stream result == K
-    single-stream joins, column for column). Per-stream
-    ``tolerance_seconds`` nulls a stream's match row-atomically once
-    it is staler than that stream's bound.
+    Each stream's carry is row-atomic, and equal-ts visibility and the
+    duplicate-row tiebreak match :func:`asof_join` exactly (pinned:
+    K-stream result == K single-stream joins, column for column).
+    Per-stream ``tolerance_seconds`` nulls a stream's match
+    row-atomically once it is staler than that stream's bound.
 
     Output: left columns + ``{stream}_{col}`` for every value column
     of every stream. Skew note: same entity-keyed window as
@@ -390,118 +312,18 @@ def asof_snapshot(
     of asof_join_time_split per stream instead.
     """
     by = [by] if isinstance(by, str) else list(by)
-    names = list(rights)
     value_cols = dict(value_cols or {})
-    tolerance_seconds = dict(tolerance_seconds or {})
-    for nm in names:
-        if nm not in value_cols:
-            value_cols[nm] = [
-                c
-                for c in rights[nm].columns
-                if c not in set(by) | {on}
-            ]
-    right_src = 1 if not allow_exact_matches else -1
-
-    def _vrow_type(nm: str) -> T.StructType:
-        r = rights[nm]
-        fields = [
-            T.StructField(c, r.schema[c].dataType, True)
-            for c in value_cols[nm]
-        ]
-        if nm in tolerance_seconds:
-            fields.append(
-                T.StructField("__rts", r.schema[on].dataType, True)
-            )
-        return T.StructType(fields)
-
-    vtypes = {nm: _vrow_type(nm) for nm in names}
-    lrow_t = None
-    lhs = left.select(
-        *by,
-        F.col(on).alias("__ts"),
-        F.lit(0).alias("__src"),
-        F.struct(*left.columns).alias("__row"),
-        *[
-            F.lit(None).cast(vtypes[nm]).alias(f"__v_{i}")
-            for i, nm in enumerate(names)
-        ],
+    return _asof(
+        left,
+        dict(rights),
+        on,
+        by,
+        {
+            nm: list(value_cols[nm] if nm in value_cols
+                     else _value_cols(r, on, by))
+            for nm, r in rights.items()
+        },
+        allow_exact_matches,
+        dict(tolerance_seconds or {}),
+        lambda nm, c: f"{nm}_{c}",
     )
-    lrow_t = lhs.schema["__row"].dataType
-    parts = [lhs]
-    for i, nm in enumerate(names):
-        r = rights[nm]
-        parts.append(
-            r.select(
-                *by,
-                F.col(on).alias("__ts"),
-                F.lit(right_src).alias("__src"),
-                F.lit(None).cast(lrow_t).alias("__row"),
-                *[
-                    (
-                        F.struct(
-                            *[F.col(c) for c in value_cols[nm]],
-                            *(
-                                [F.col(on).alias("__rts")]
-                                if nm in tolerance_seconds
-                                else []
-                            ),
-                        )
-                        if j == i
-                        else F.lit(None).cast(vtypes[n2])
-                    ).alias(f"__v_{j}")
-                    for j, n2 in enumerate(names)
-                ],
-            )
-        )
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionByName(p)
-
-    w = (
-        W.partitionBy(*by)
-        .orderBy(
-            F.col("__ts").asc(),
-            F.col("__src").asc(),
-            *[
-                F.col(f"__v_{i}").asc_nulls_first()
-                for i in range(len(names))
-            ],
-        )
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    filled = unioned.select(
-        "__row",
-        *[
-            F.last(F.col(f"__v_{i}"), ignorenulls=True)
-            .over(w)
-            .alias(f"__f_{i}")
-            for i in range(len(names))
-        ],
-    ).where(F.col("__row").isNotNull())
-
-    from protosc_spark.windows import _epoch_us
-
-    out_cols = [
-        F.col(f"__row.{c}").alias(c) for c in left.columns
-    ]
-    for i, nm in enumerate(names):
-        if nm in tolerance_seconds:
-            fresh = F.col(f"__f_{i}.__rts").isNotNull() & (
-                _epoch_us(F.col(f"__row.{on}"))
-                - _epoch_us(F.col(f"__f_{i}.__rts"))
-                <= F.lit(
-                    int(tolerance_seconds[nm] * 1_000_000)
-                ).cast("long")
-            )
-            out_cols += [
-                F.when(fresh, F.col(f"__f_{i}.{c}")).alias(
-                    f"{nm}_{c}"
-                )
-                for c in value_cols[nm]
-            ]
-        else:
-            out_cols += [
-                F.col(f"__f_{i}.{c}").alias(f"{nm}_{c}")
-                for c in value_cols[nm]
-            ]
-    return filled.select(*out_cols)

@@ -5,9 +5,12 @@ and obeys the same contract: fixed declared width, per-sample map, no
 cross-row state (cross-row features come from windows.py, never here —
 that separation is what makes leakage impossible in this layer).
 
-JVM-expression extractors stay inside whole-stage codegen; the two
-numpy-ish ones (char_hist, hashed_ngram) are Arrow-vectorized pandas
-UDFs (series -> series of arrays), never per-row Python.
+JVM-expression extractors stay inside whole-stage codegen. The two
+numpy-ish ones (char_hist, hashed_ngram) slice one fused Arrow-
+vectorized pandas UDF (series -> series of arrays, never per-row
+Python): Spark's higher-order functions run interpreted per element,
+and a pure-JVM build of the same two histograms measured about 20x
+slower at sf0.1.
 
 Reference analogies:
 * length_stats  — the scalar summaries protosc computes implicitly
@@ -101,38 +104,6 @@ def _char_hist_from_tokens(tok_lists: list) -> np.ndarray:
     return flat / (totals * width)
 
 
-def _char_hist_jvm(df: DataFrame) -> Column:
-    """Pure-JVM variant, bit-equal to token_length_hist_np. NOT the
-    default: Spark evaluates higher-order functions (transform/filter)
-    interpreted, per element, and does NOT share the bin array across
-    the 16 filter lambdas — measured ~20x SLOWER than the Arrow
-    pandas UDF at sf0.1. Kept as the reference implementation for the
-    bit-parity test and as documentation of the measurement."""
-    lo, hi = CHAR_HIST_RANGE
-    lens = F.transform(F.col("__tokens"), lambda t: F.length(t).cast("double"))
-    in_range = F.filter(lens, lambda v: (v >= F.lit(lo)) & (v <= F.lit(hi)))
-    total = F.size(in_range)
-    width = (hi - lo) / CHAR_HIST_BINS
-    bins = F.transform(
-        in_range,
-        lambda v: F.least(
-            ((v - F.lit(lo)) / F.lit(width)).cast("long"),
-            F.lit(CHAR_HIST_BINS - 1),
-        ),
-    )
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(CHAR_HIST_BINS - 1)),
-        lambda b: F.size(F.filter(bins, lambda x: x == b.cast("long"))),
-    )
-    dens = F.transform(
-        counts, lambda c: c.cast("double") / total.cast("double") / F.lit(width)
-    )
-    zeros = F.array(*[F.lit(0.0)] * CHAR_HIST_BINS)
-    return F.when(
-        F.col("text").isNull() | (F.length("text") == 0) | (total == 0), zeros
-    ).otherwise(dens)
-
-
 def text_batch_np(texts: np.ndarray) -> np.ndarray:
     """Fused kernel: tokenize ONCE, emit char_hist ++ hashed_ngram
     (width 8+16). Both extractors slice the SAME UDF call below, which
@@ -211,41 +182,6 @@ def _ngram_from_tokens(tok_lists: list, buckets: int = NGRAM_BUCKETS) -> np.ndar
     totals = flat.sum(axis=1, keepdims=True).astype(np.float64)
     totals[totals == 0] = 1.0
     return flat / totals
-
-
-def _hashed_ngram_jvm(df: DataFrame) -> Column:
-    """Pure-JVM variant of hashed_ngram_np (Spark's crc32 == zlib's, so
-    buckets are bit-identical). NOT the default — same interpreted
-    higher-order-function cost as _char_hist_jvm (crc32 re-evaluated
-    once per bucket comparison pass); the Arrow pandas UDF is ~20x
-    faster. Kept for the bit-parity test."""
-    toks = F.col("__tokens")
-    n = F.size(toks)
-    bucket = lambda c: F.pmod(F.crc32(F.encode(c, "UTF-8")), F.lit(NGRAM_BUCKETS))  # noqa: E731
-    uni = F.transform(toks, bucket)
-    bi = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: bucket(
-                F.concat(
-                    F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-                )
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    grams = F.concat(uni, bi)
-    total = F.size(grams)
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(NGRAM_BUCKETS - 1)),
-        lambda b: F.size(F.filter(grams, lambda x: x == b.cast("bigint"))),
-    )
-    zeros = F.array(*[F.lit(0.0)] * NGRAM_BUCKETS)
-    return F.when(
-        F.col("text").isNull() | (F.length("text") == 0) | (total == 0), zeros
-    ).otherwise(
-        F.transform(counts, lambda c: c.cast("double") / total.cast("double"))
-    )
 
 
 hashed_ngram = Extractor(

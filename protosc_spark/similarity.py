@@ -1676,7 +1676,9 @@ def hard_negatives(
     Exact kernel, same contract as :func:`brute_force_topk`: anchors
     are a bounded set (``anchor_pred``) broadcast against the corpus,
     ties broken by neighbor id. Rows with NULL labels never qualify as
-    negatives (label inequality is three-valued). For corpus-as-
+    negatives (label inequality is three-valued), and an anchor with a
+    NULL label has no negatives: it is filtered out of the anchor set
+    before the broadcast cross join, so it yields no rows. For corpus-as-
     anchors at scale, compose the per-cell kernels instead
     (:func:`knn_graph` with over-fetch + label mask carries the same
     tie rule).
@@ -1690,7 +1692,9 @@ def hard_negatives(
         F.col("unit"),
     )
     anchors = (
-        with_unit_vectors(emb.where(anchor_pred), vec_col)
+        with_unit_vectors(
+            emb.where(anchor_pred & F.col(label_col).isNotNull()), vec_col
+        )
         .select(
             F.col(id_col).alias("query_id"),
             F.col(label_col).alias("anchor_label"),

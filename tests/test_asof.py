@@ -1,11 +1,12 @@
-"""As-of join: both implementations vs a per-conversation pandas
-merge_asof oracle (FIXTURES.md F5), plus strict-past edge cases."""
+"""As-of join: the union-tag kernel's three entry points vs a
+per-conversation pandas merge_asof oracle (FIXTURES.md F5), plus
+strict-past edge cases."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from protosc_spark.asof import asof_join, asof_join_grouped
+from protosc_spark.asof import asof_join, asof_join_time_split, asof_snapshot
 from protosc_spark.datagen import generate_attribute_updates
 
 
@@ -14,7 +15,7 @@ def updates(spark):
     return generate_attribute_updates(spark, n_conversations=120, seed=42).cache()
 
 
-def _oracle(left_pdf, right_pdf, allow_exact):
+def _oracle(left_pdf, right_pdf, allow_exact, tolerance=None):
     left_pdf = left_pdf.sort_values(["ts", "conv_id"], kind="mergesort")
     right_pdf = right_pdf.sort_values(["ts", "conv_id"], kind="mergesort")
     out = pd.merge_asof(
@@ -24,13 +25,14 @@ def _oracle(left_pdf, right_pdf, allow_exact):
         by="conv_id",
         direction="backward",
         allow_exact_matches=allow_exact,
+        tolerance=tolerance,
     )
     return out.sort_values(["conv_id", "turn_idx"], kind="mergesort").reset_index(
         drop=True
     )
 
 
-@pytest.mark.parametrize("impl", [asof_join, asof_join_grouped])
+@pytest.mark.parametrize("impl", [asof_join, asof_join_time_split])
 def test_asof_matches_pandas_oracle(impl, transcripts, updates):
     got = (
         impl(transcripts, updates, on="ts", by="conv_id")
@@ -61,7 +63,7 @@ def test_strict_past_exact_ts_invisible(spark):
             }
         )
     )
-    for impl in (asof_join, asof_join_grouped):
+    for impl in (asof_join, asof_join_time_split):
         got = (
             impl(left, right).orderBy("turn_idx").select("attr_value").toPandas()
         )
@@ -93,28 +95,11 @@ def test_no_updates_means_null(transcripts, updates):
     assert n_null == n_rows_without
 
 
-def test_asof_deterministic_vs_grouped_on_skew(spark, transcripts, updates):
-    # the skew-tail conversation goes through both paths identically
-    a = (
-        asof_join(transcripts, updates)
-        .orderBy("conv_id", "turn_idx")
-        .collect()
-    )
-    b = (
-        asof_join_grouped(transcripts, updates, n_buckets=7)
-        .orderBy("conv_id", "turn_idx")
-        .collect()
-    )
-    assert a == b
-
-
 def test_null_in_latest_update_stays_null_row_atomic(spark):
     """Row-atomic semantics: every output value comes from THE most
     recent right row — a NULL field in it must NOT be backfilled per
-    column from an older update. Pinned across all three kernels and
-    across the time-split bucket boundary (round-1 ADVICE)."""
-    from protosc_spark.asof import asof_join_time_split
-
+    column from an older update. Pinned for asof_join and across the
+    time-split bucket boundary."""
     lpdf = pd.DataFrame(
         {
             "conv_id": ["a"],
@@ -134,7 +119,6 @@ def test_null_in_latest_update_stays_null_row_atomic(spark):
     right = spark.createDataFrame(rpdf)
     impls = [
         lambda: asof_join(left, right, value_cols=["x", "y"]),
-        lambda: asof_join_grouped(left, right, value_cols=["x", "y"]),
         # split_seconds=86400: the NULL-x update is the bucket-boundary
         # carry row into the left row's (later) day bucket
         lambda: asof_join_time_split(
@@ -276,17 +260,11 @@ def test_asof_tolerance_matches_pandas_merge_asof(spark, events):
     assert list(got["pv"].fillna(-1)) == list(want["pv"].fillna(-1))
 
 
-def test_tolerance_equal_across_all_three_kernels(transcripts, updates):
-    """tolerance_seconds now exists on every kernel: window, grouped
-    merge_asof, and time-split (where carry rows keep their ORIGINAL
-    update ts, so staleness is measured across bucket boundaries too).
-    All three must null the same matches."""
-    from protosc_spark.asof import (
-        asof_join,
-        asof_join_grouped,
-        asof_join_time_split,
-    )
-
+def test_tolerance_join_and_time_split_match_pandas(transcripts, updates):
+    """asof_join and time-split (where carry rows keep their ORIGINAL
+    update ts, so staleness is measured across bucket boundaries too)
+    null the same matches as pandas merge_asof with the same
+    tolerance."""
     tol = 6 * 3600  # stale after 6 hours
 
     def key_rows(df):
@@ -299,20 +277,53 @@ def test_tolerance_equal_across_all_three_kernels(transcripts, updates):
         asof_join(transcripts, updates, value_cols=["attr_value"],
                   tolerance_seconds=tol)
     )
-    grouped = key_rows(
-        asof_join_grouped(transcripts, updates, value_cols=["attr_value"],
-                          tolerance_seconds=tol)
-    )
     split = key_rows(
         asof_join_time_split(transcripts, updates, value_cols=["attr_value"],
                              split_seconds=3600, tolerance_seconds=tol)
     )
-    assert base == grouped == split
+    want = _oracle(
+        transcripts.select("conv_id", "turn_idx", "ts").toPandas(),
+        updates.select("conv_id", "ts", "attr_value").toPandas(),
+        allow_exact=False,
+        tolerance=pd.Timedelta(seconds=tol),
+    )
+    oracle = {
+        (c, int(t)): None if pd.isna(v) else v
+        for c, t, v in zip(want["conv_id"], want["turn_idx"], want["attr_value"])
+    }
+    assert base == split == oracle
     # the tolerance actually bites: strictly fewer non-null matches
     loose = key_rows(asof_join(transcripts, updates, value_cols=["attr_value"]))
     n_loose = sum(v is not None for v in loose.values())
     n_tight = sum(v is not None for v in base.values())
     assert 0 < n_tight < n_loose
+
+
+def test_null_ts_update_never_matches(spark):
+    """A right row with a NULL ts has no known time, so it is never in
+    the strict past of a turn: it must not leak into the earliest turn
+    (where it would sort first, NULLS FIRST) of any entry point."""
+    import datetime as dt
+
+    t = lambda s: dt.datetime(2025, 1, 1) + dt.timedelta(seconds=s)  # noqa: E731
+    left = spark.createDataFrame(
+        [("a", 0, t(10)), ("a", 1, t(30))],
+        "conv_id string, turn_idx int, ts timestamp",
+    )
+    right = spark.createDataFrame(
+        [("a", None, 5.0), ("a", t(20), 1.0)],
+        "conv_id string, ts timestamp, x double",
+    )
+    outs = {
+        "asof_join": asof_join(left, right),
+        "time_split": asof_join_time_split(left, right, split_seconds=3600),
+        "snapshot": asof_snapshot(left, {"r": right}).withColumnRenamed(
+            "r_x", "x"
+        ),
+    }
+    for name, df in outs.items():
+        got = {r["turn_idx"]: r["x"] for r in df.collect()}
+        assert got == {0: None, 1: 1.0}, name
 
 
 # -------------------------------------------------------- snapshot

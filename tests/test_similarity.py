@@ -1054,3 +1054,18 @@ class TestHardNegatives:
             self._df(spark, rows), F.col("vec_id") == 0, k=5
         ).collect()
         assert [r["neighbor_id"] for r in out] == [2]
+
+    def test_null_label_anchor_yields_no_rows(self, spark):
+        from pyspark.sql import functions as F
+
+        from protosc_spark.similarity import hard_negatives
+
+        # both anchors selected; the NULL-label one is dropped from the
+        # anchor set, the labelled one still finds its negative
+        rows = [(0, [1.0, 0.0], None), (1, [1.0, 0.1], 1),
+                (2, [0.9, 0.1], 2)]
+        out = hard_negatives(
+            self._df(spark, rows), F.col("vec_id") <= 1, k=5
+        )
+        got = [(r["query_id"], r["neighbor_id"]) for r in out.collect()]
+        assert got == [(1, 2)]

@@ -137,35 +137,48 @@ def test_fingerprint_order_sensitive(spark):
     assert fps[0] != fps[1]
 
 
-def test_jvm_extractor_variants_bit_equal_numpy(spark, transcripts):
-    """The documented (non-default) pure-JVM builders must stay
-    bit-equal to the numpy kernels the default Arrow UDFs use —
-    Spark's crc32 == zlib.crc32 and identical division order."""
+def test_text_batch_udf_matches_per_row_reference():
+    """The fused char_hist ++ hashed_ngram pandas UDF equals a plain
+    per-row reference: np.histogram density of token lengths (all
+    zeros for a row without tokens), then crc32 % 16 counts over
+    unigrams and bigrams, L1-normalised. Tokens are split on single
+    spaces, so a double space yields an empty token."""
+    import zlib
+
     import numpy as np
 
-    from protosc_spark.extract import Extractor, extract
-    from protosc_spark.features.text import (
-        CHAR_HIST_BINS,
-        NGRAM_BUCKETS,
-        _char_hist_jvm,
-        _hashed_ngram_jvm,
-        hashed_ngram_np,
-        token_length_hist_np,
-    )
+    from protosc_spark.features.text import _text_batch_udf
 
-    jvm = [
-        Extractor("char_hist", CHAR_HIST_BINS, _char_hist_jvm,
-                  requires=("__tokens",)),
-        Extractor("hashed_ngram", NGRAM_BUCKETS, _hashed_ngram_jvm,
-                  requires=("__tokens",)),
+    texts = [
+        "hello world",
+        "",
+        None,
+        "a  b",
+        "héllo wörld 日本語 ok",
+        "one",
+        "abcdefghij xy",
     ]
-    sample = transcripts.limit(500)
-    out, _ = extract(sample, jvm, keep_cols=["conv_id", "turn_idx", "text"])
-    rows = out.collect()
-    texts = np.array([r.text or "" for r in rows], dtype=object)
-    exp = np.hstack([token_length_hist_np(texts), hashed_ngram_np(texts)])
-    got = np.array([r.features for r in rows])
-    assert np.array_equal(got, exp)
+
+    def ref(text):
+        toks = text.split(" ") if text else []
+        lens = [len(t) for t in toks]
+        hist = (
+            np.histogram(lens, 8, (0, 8), density=True)[0]
+            if toks
+            else np.zeros(8)
+        )
+        grams = toks + [a + " " + b for a, b in zip(toks, toks[1:])]
+        counts = np.zeros(16)
+        for g in grams:
+            counts[zlib.crc32(g.encode("utf-8")) % 16] += 1
+        if grams:
+            counts /= counts.sum()
+        return np.concatenate([hist, counts])
+
+    got = np.array(list(_text_batch_udf.func(pd.Series(texts))))
+    want = np.array([ref(t) for t in texts])
+    assert got.shape == (len(texts), 24)
+    assert np.array_equal(got, want)
 
 
 def test_repetition_stats_hand_cases(spark):
