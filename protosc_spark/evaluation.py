@@ -2893,57 +2893,29 @@ def _kw_rank_stats(
     df: DataFrame, value_col: str, group_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared rank machinery for :func:`kruskal_wallis` and
-    :func:`dunn_posthoc`: per-group doubled rank sums plus pooled
-    tie totals, all exact DECIMAL(38,0) off the (group, value)
-    HISTOGRAM (one raw scan; the only window runs over distinct
-    values, never rows — the house rank rule shared with
-    :func:`mannwhitney_u`).
+    :func:`dunn_posthoc`: the (value, group) HISTOGRAM of one raw scan
+    through ``stats._rank_sums`` (one window over distinct values,
+    never rows — the house rank rule shared with
+    :func:`mannwhitney_u`), all exact DECIMAL(38,0).
 
     Returns ``(per_group, totals)``: per_group has one row per group
     (g, __ng, __r2g) where __r2g = 2 * (sum of pooled midranks of
-    the group's rows); totals is ONE row (__n, __k, __tie) with
+    the group's rows); totals is ONE row (__n, __tie) with
     __tie = sum_v (t_v^3 - t_v) the standard tie correction."""
-    dec = "decimal(38,0)"
+    from protosc_spark.stats import _rank_sums
+
     v = F.col(value_col).cast("bigint")
-    rows = df.where(
-        v.isNotNull() & F.col(group_col).isNotNull()
-    ).select(F.col(group_col).alias("g"), v.alias("v"))
     hist = (
-        rows.groupBy("g", "v")
-        .agg(F.count(F.lit(1)).cast(dec).alias("c"))
-        # feeds the pooled window AND the per-group rollup
-        .localCheckpoint(eager=True)
+        df.where(v.isNotNull() & F.col(group_col).isNotNull())
+        .groupBy(v.alias("v"), F.col(group_col).alias("g"))
+        .agg(F.count(F.lit(1)).alias("c"))
     )
-    pooled = hist.groupBy("v").agg(F.sum("c").alias("t"))
-    w_cum = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
-    r2 = pooled.select(
-        "v",
-        "t",
-        (
-            F.lit(2).cast(dec)
-            * F.coalesce(
-                F.sum("t").over(w_cum), F.lit(0).cast(dec)
-            )
-            + F.col("t")
-            + F.lit(1).cast(dec)
-        ).alias("__r2v"),
+    sums = _rank_sums(hist, [])
+    per_group = sums.select(
+        "g", F.col("ng").alias("__ng"), F.col("r2g").alias("__r2g")
     )
-    per_group = (
-        hist.join(r2.select("v", "__r2v"), "v")
-        .groupBy("g")
-        .agg(
-            F.sum("c").alias("__ng"),
-            F.sum(F.col("c") * F.col("__r2v")).alias("__r2g"),
-        )
-    )
-    totals = r2.agg(
-        F.sum("t").alias("__n"),
-        F.count(F.lit(1)).alias("__nv"),
-        F.sum(
-            F.col("t")
-            * (F.col("t") - F.lit(1).cast(dec))
-            * (F.col("t") + F.lit(1).cast(dec))
-        ).alias("__tie"),
+    totals = sums.agg(
+        F.sum("ng").alias("__n"), F.sum("tie").alias("__tie")
     )
     return per_group, totals
 
@@ -2966,11 +2938,12 @@ def kruskal_wallis(
             / (1 - sum_v (t_v^3 - t_v) / (N^3 - N))
 
     Exactness, the house way: per-group rank sums use DOUBLED
-    pooled midranks (R2_g = 2 R_g, exact DECIMAL(38,0) off the
-    value histogram — no corpus sort, no per-row rank join). The
-    textbook form subtracts two O(N^3)-sized terms — quantizing
-    R_g^2/n_g would overflow the integer grid at corpus N — so H is
-    computed in the algebraically identical DEVIATION form: with
+    pooled midranks (R2_g = 2 R_g, exact DECIMAL(38,0) from
+    ``stats._rank_sums`` over the value histogram — one window over
+    distinct values, no per-row rank join). The textbook form
+    subtracts two O(N^3)-sized terms — quantizing R_g^2/n_g would
+    overflow the integer grid at corpus N — so H is computed in the
+    algebraically identical DEVIATION form: with
     D2_g = R2_g - n_g (N + 1) (exact integer, sums to 0),
 
         H_unc = sum_g 3 * D2_g^2 / (4 n_g N (N+1)),

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from .sampling import hash_bucket
@@ -926,9 +927,14 @@ def permutation_test(
     |observed|}) / (n_perm + 1); permutations where either
     pseudo-group lands empty are counted as extreme (conservative).
 
-    Exactness: integer-valued metrics sum exactly (BIGINT/DECIMAL);
-    each mean is one float division and the comparison runs on
-    identically-derived doubles in both engines.
+    ``value_col`` must be integer-valued (an integral or scale-0
+    decimal type): float, double and decimal columns with a
+    fractional scale raise ``ValueError`` rather than being
+    truncated; scale such a metric to integer units first.
+
+    Exactness: the values sum exactly as BIGINT; each mean is one
+    float division and the comparison runs on identically-derived
+    doubles in both engines.
 
     Scale shape: the B-fold explode happens MAP-SIDE and partial
     aggregation collapses it to n_perm rows per task before the
@@ -936,6 +942,14 @@ def permutation_test(
     B x corpus. Output: one row (n_a, n_b, obs_diff, n_perm,
     n_extreme, p_value).
     """
+    dt = df.select(value_col).schema[0].dataType
+    if isinstance(dt, (T.FloatType, T.DoubleType)) or (
+        isinstance(dt, T.DecimalType) and dt.scale > 0
+    ):
+        raise ValueError(
+            f"permutation_test: {value_col!r} is {dt.simpleString()}; "
+            "it needs integer values (scale them to integer units)"
+        )
     base = df.where(
         F.col(group_col).isin(group_a, group_b)
         & F.col(value_col).isNotNull()

@@ -86,18 +86,14 @@ class CombinedFoldModel:
     ):
         if col_groups is None:
             chisq = quantize(
-                chisquare_features(
-                    train_df, "features", "y", n_features, approx_rows=n_train
-                )
+                chisquare_features(train_df, "features", "y", n_features)
             )
             corr = lambda fs: quantize(  # noqa: E731
                 correlation_submatrix(train_df, fs)
             )
         else:
             chisq = quantize(
-                chisquare_features_grouped(
-                    train_df, col_groups, "features", "y", approx_rows=n_train
-                )
+                chisquare_features_grouped(train_df, col_groups, "features", "y")
             )
             corr = lambda fs: quantize(  # noqa: E731
                 correlation_blockmax(train_df, fs, col_groups)

@@ -137,19 +137,14 @@ class FilterModel:
 
             if col_groups is None:
                 chisq = quantize(
-                    chisquare_features(
-                        train, "features", "y", n_features, approx_rows=n_train
-                    )
+                    chisquare_features(train, "features", "y", n_features)
                 )
                 corr = lambda fs, _t=train: quantize(  # noqa: E731
                     correlation_submatrix(_t, fs)
                 )
             else:
                 chisq = quantize(
-                    chisquare_features_grouped(
-                        train, col_groups, "features", "y",
-                        approx_rows=n_train,
-                    )
+                    chisquare_features_grouped(train, col_groups, "features", "y")
                 )
                 corr = lambda fs, _t=train: quantize(  # noqa: E731
                     correlation_blockmax(_t, fs, col_groups)

@@ -7,21 +7,25 @@ per-partition sufficient statistics").
 * :func:`chisquare_features` — per-feature Kruskal–Wallis H across the
   label classes (what the reference calls chi-square,
   protosc/model/utils.py:56-89, a per-feature scipy loop there).
-  Here: posexplode to (feature, value, y) -> average ranks from a
-  window + a tie groupBy -> per-(feature, class) rank sums -> final H
-  on the driver from ~n_features*n_classes floats. Exact parity with
-  the tie-corrected scipy formula (numerics.kruskal_h).
+  Here: posexplode to a (feature, value, class) count histogram ->
+  per-(feature, class) doubled rank sums from one window over each
+  feature's distinct values (:func:`_rank_sums`, shared with
+  evaluation.kruskal_wallis and dunn_posthoc) -> final H on the driver
+  from ~n_features*n_classes numbers. Exact parity with the
+  tie-corrected scipy formula (numerics.kruskal_h).
 * :func:`correlation_matrix` — Pearson feature x feature correlation
   from one pass of per-partition Gramian partials (n, sum x, X^T X)
   combined on the driver (tree-combine of numpy blocks). Matches
   np.corrcoef to allclose (reference protosc/feature_matrix.py:122-138
   computes np.corrcoef on the dense matrix).
 
-Scale notes: ranks shuffle rows*features once, partitioned BY FEATURE —
-embarrassingly parallel across features, which is the dimension that
-grows with extractor count; the Gramian pass is map-side only (no
-shuffle) and its partial size is p^2 doubles per partition, independent
-of row count.
+Scale notes: the rank histogram shuffles distinct (feature, value,
+class) cells, partitioned BY FEATURE — embarrassingly parallel across
+features, which is the dimension that grows with extractor count. A task
+holds one feature's distinct values, not its rows; a near-distinct
+feature is as large there as its row count. The Gramian pass is map-side
+only (no shuffle) and its partial size is p^2 doubles per partition,
+independent of row count.
 """
 
 from __future__ import annotations
@@ -36,145 +40,35 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 
-# Above this many exploded (row, feature) cells the windowed rank path
-# (one global sort per feature, i.e. ALL rows of one feature in one
-# task) becomes the straggler/OOM driver at scale; switch to the
-# range-partitioned two-pass ranking which has no per-feature
-# single-partition stage.
-WINDOW_RANK_MAX_CELLS = 2_000_000
+def _rank_sums(hist: DataFrame, by: list[str]) -> DataFrame:
+    """Kruskal–Wallis rank sufficient statistics off a value histogram.
 
+    ``hist`` holds (*by, v, g, c): the count c (BIGINT) of rows with
+    value v in group g, per ``by`` key. One window ordered by v within
+    each ``by`` key carries two frames: the peer frame gives the pooled
+    tie count t_v and the running frame the inclusive count up to v, so
+    the DOUBLED midrank of v is 2 * upto - t_v + 1 (an exact integer).
 
-def _rank_group_stats_window(ex: DataFrame) -> DataFrame:
-    """Rank sufficient statistics via a per-feature sort window.
-
-    Small-input path: puts every row of one feature in one task —
-    exact, cheap at model-selection scale, non-scalable by design.
+    Returns per (*by, g) the columns ng (rows), r2g (sum of doubled
+    midranks) and tie = sum of c * (t_v^2 - 1) — the group's share of
+    sum_v (t_v^3 - t_v) — all DECIMAL(38,0). A task holds the distinct
+    values of one ``by`` key, never its raw rows.
     """
-    w_rank = W.partitionBy("fid").orderBy("x")
-    w_tie = W.partitionBy("fid", "x")
-    ranked = ex.select(
-        "fid",
-        "y",
-        "x",
-        (
-            F.rank().over(w_rank)
-            + (F.count(F.lit(1)).over(w_tie) - F.lit(1)) / F.lit(2.0)
-        ).alias("r"),
-        F.count(F.lit(1)).over(w_tie).alias("t"),
+    dec = "decimal(38,0)"
+    w = W.partitionBy(*by).orderBy("v")
+    c = F.col("c").cast(dec)
+    t = F.sum(c).over(w.rangeBetween(W.currentRow, W.currentRow))
+    upto = F.sum(c).over(w.rangeBetween(W.unboundedPreceding, W.currentRow))
+    one = F.lit(1).cast(dec)
+    ranked = hist.select(
+        *by, "g", c.alias("c"), t.alias("t"),
+        (F.lit(2).cast(dec) * upto - t + one).alias("r2v"),
     )
-    # per (fid, y): rank sums, counts and the tie contribution. A tie
-    # group of size t contributes t^3 - t == t rows * (t^2 - 1), so the
-    # per-row term (t^2 - 1) folds into the same single aggregation.
-    return ranked.groupBy("fid", "y").agg(
-        F.sum("r").alias("rsum"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col("t").cast("double") * F.col("t") - F.lit(1.0)).alias("tie_part"),
+    return ranked.groupBy(*by, "g").agg(
+        F.sum("c").alias("ng"),
+        F.sum(F.col("c") * F.col("r2v")).alias("r2g"),
+        F.sum(F.col("c") * (F.col("t") * F.col("t") - one)).alias("tie"),
     )
-
-
-def _rank_group_stats_rangepart(ex: DataFrame, n_parts: int | None = None) -> DataFrame:
-    """Rank sufficient statistics via range-partitioned two-pass ranking.
-
-    No stage ever holds all rows of one feature:
-      1. reduce rows to the distinct-value table (fid, x) with total
-         tie count t and per-class counts — one hash shuffle with
-         map-side combine;
-      2. range-partition that table by (fid, x) (equal keys land in one
-         partition; one feature may SPAN many partitions) and sort
-         within partitions;
-      3. first pass: per-(partition, feature) total counts -> collected
-         (tiny: n_parts * n_features rows) -> exclusive prefix offsets
-         per (partition, feature), broadcast;
-      4. second pass (mapInPandas over the SAME persisted partitions):
-         vectorized within-partition exclusive cumsum + offset gives
-         each distinct value its global count-of-smaller, hence its
-         average rank; emit per-class rank-sum contributions.
-    The average rank of value x is (#values < x) + (t + 1)/2, which is
-    exactly the windowed rank()+(t-1)/2 formulation, so both paths are
-    bit-comparable (pinned in tests/test_stats.py).
-    """
-    spark = ex.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    a = ex.groupBy("fid", "x", "y").agg(F.count(F.lit(1)).alias("c"))
-    b = a.groupBy("fid", "x").agg(
-        F.sum("c").alias("t"),
-        F.collect_list(F.struct("y", "c")).alias("ycs"),
-    )
-    b = (
-        b.repartitionByRange(n_parts, "fid", "x")
-        .sortWithinPartitions("fid", "x")
-        .persist()
-    )
-    per_part = (
-        b.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid", "fid")
-        .agg(F.sum("t").alias("pt"))
-        .collect()
-    )
-    by_fid: dict[int, list] = {}
-    for r in per_part:
-        by_fid.setdefault(int(r["fid"]), []).append((int(r["pid"]), int(r["pt"])))
-    offsets: dict[tuple[int, int], float] = {}
-    for fid, lst in by_fid.items():
-        lst.sort()
-        run = 0
-        for pid, pt in lst:
-            offsets[(pid, fid)] = float(run)
-            run += pt
-    bc = spark.sparkContext.broadcast(offsets)
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        off = bc.value
-        carry: dict[int, float] = {}
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            fid = pdf["fid"].to_numpy()
-            t = pdf["t"].to_numpy(dtype=np.float64)
-            # exclusive within-batch cumsum per feature (rows arrive
-            # sorted by (fid, x); one (fid, x) is always a single row)
-            local = pdf.groupby("fid", sort=False)["t"].cumsum().to_numpy(
-                dtype=np.float64
-            ) - t
-            start = np.array(
-                [carry.get(f, off.get((pid, f), 0.0)) for f in fid]
-            )
-            rank = start + local + (t + 1.0) / 2.0
-            tie_term = t * t - 1.0
-            for f, tot in pdf.groupby("fid", sort=False)["t"].sum().items():
-                carry[int(f)] = carry.get(
-                    int(f), off.get((pid, int(f)), 0.0)
-                ) + float(tot)
-            e = pd.DataFrame(
-                {"fid": fid, "rank": rank, "tie": tie_term, "ycs": pdf["ycs"]}
-            ).explode("ycs", ignore_index=True)
-            y = np.fromiter((d["y"] for d in e["ycs"]), dtype=np.int64, count=len(e))
-            c = np.fromiter((d["c"] for d in e["ycs"]), dtype=np.float64, count=len(e))
-            yield pd.DataFrame(
-                {
-                    "fid": e["fid"].to_numpy(dtype=np.int64),
-                    "y": y,
-                    "rsum": c * e["rank"].to_numpy(),
-                    "cnt": c,
-                    "tie_part": c * e["tie"].to_numpy(),
-                }
-            )
-
-    contrib = b.mapInPandas(
-        kernel,
-        schema="fid long, y long, rsum double, cnt double, tie_part double",
-    )
-    grp = contrib.groupBy("fid", "y").agg(
-        F.sum("rsum").alias("rsum"),
-        F.sum("cnt").alias("cnt"),
-        F.sum("tie_part").alias("tie_part"),
-    )
-    return grp, b
 
 
 def chisquare_features(
@@ -182,55 +76,47 @@ def chisquare_features(
     features_col: str = "features",
     label_col: str = "y",
     n_features: int | None = None,
-    method: str = "auto",
     approx_rows: int | None = None,
 ) -> np.ndarray:
     """Kruskal–Wallis H per feature column of the array, distributed.
 
     Returns np.ndarray[n_features] of H statistics (tie-corrected).
-    ``method``: "window" (per-feature sort window — small inputs),
-    "rangepart" (range-partitioned two-pass — no per-feature
-    single-partition stage, the 100-TB path), or "auto" (window iff
-    approx_rows * n_features is known to be small).
+    The per-(feature, value, class) histogram feeds :func:`_rank_sums`
+    partitioned by feature; the driver computes H from
+    n_features * n_classes rank sums (numerics.kruskal_h_from_stats).
     Constant features get H := 0 (see numerics.kruskal_h).
+    ``approx_rows`` is accepted and ignored (older callers pass it).
     """
-    ex = df.select(
-        F.posexplode(F.col(features_col)).alias("fid", "x"),
-        F.col(label_col).alias("y"),
+    from protosc_spark.numerics import kruskal_h_from_stats
+
+    hist = (
+        df.select(
+            F.posexplode(F.col(features_col)).alias("fid", "v"),
+            F.col(label_col).alias("g"),
+        )
+        .groupBy("fid", "v", "g")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
-    if method == "auto":
-        cells = (
-            approx_rows * n_features
-            if approx_rows is not None and n_features is not None
-            else None
-        )
-        method = (
-            "window"
-            if cells is not None and cells <= WINDOW_RANK_MAX_CELLS
-            else "rangepart"
-        )
-    cached = None
-    if method == "window":
-        grp = _rank_group_stats_window(ex)
-    elif method == "rangepart":
-        grp, cached = _rank_group_stats_rangepart(ex)
-    else:
-        raise ValueError(f"unknown method {method!r}")
-    grp_pdf = grp.toPandas()
-    if cached is not None:
-        cached.unpersist()
+    grp = _rank_sums(hist, ["fid"]).select(
+        "fid",
+        "g",
+        F.col("ng").cast("double").alias("ng"),
+        (F.col("r2g").cast("double") / F.lit(2.0)).alias("rsum"),
+        F.col("tie").cast("double").alias("tie"),
+    )
+    grp_pdf = grp.toPandas().sort_values(["fid", "g"])
 
     if n_features is None:
         n_features = int(grp_pdf["fid"].max()) + 1
     out = np.full(n_features, np.nan)
     for fid, sub in grp_pdf.groupby("fid"):
-        cnts = sub["cnt"].to_numpy(dtype=np.float64)
-        rsums = sub["rsum"].to_numpy(dtype=np.float64)
-        n = int(cnts.sum())
-        tie_sum = float(sub["tie_part"].sum())
-        h = 12.0 / (n * (n + 1)) * np.sum(rsums**2 / cnts) - 3.0 * (n + 1)
-        t = 1.0 - tie_sum / float(n**3 - n)
-        out[int(fid)] = 0.0 if t == 0 else h / t
+        cnts = sub["ng"].to_numpy(dtype=np.float64)
+        out[int(fid)] = kruskal_h_from_stats(
+            sub["rsum"].to_numpy(dtype=np.float64),
+            cnts,
+            int(cnts.sum()),
+            float(sub["tie"].sum()),
+        )
     return out
 
 
@@ -240,8 +126,6 @@ def chisquare_features_grouped(
     features_col: str = "features",
     label_col: str = "y",
     n_classes: int | None = None,
-    method: str = "auto",
-    approx_rows: int | None = None,
 ) -> np.ndarray:
     """Kruskal–Wallis H per LOGICAL feature, where a feature owns the
     channel columns listed in its ``col_groups`` entry (the reference's
@@ -260,10 +144,7 @@ def chisquare_features_grouped(
     from protosc_spark.numerics import chi2_sf
 
     n_cols = 1 + max(c for g in col_groups for c in g)
-    h_cols = chisquare_features(
-        df, features_col, label_col, n_cols, method=method,
-        approx_rows=approx_rows,
-    )
+    h_cols = chisquare_features(df, features_col, label_col, n_cols)
     if any(len(g) > 1 for g in col_groups) and n_classes is None:
         n_classes = df.select(label_col).distinct().count()
     out = np.empty(len(col_groups))

@@ -792,6 +792,17 @@ class TestPermutationTest:
         r = self._run(spark, rows)
         assert r["n_a"] == 2 and r["n_b"] == 2
 
+    def test_fractional_values_raise(self, spark):
+        """0.7 vs 0.2 would truncate to 0 vs 0 under a BIGINT cast."""
+        from protosc_spark.experiment import permutation_test
+
+        df = spark.createDataFrame(
+            [(1, "en", 0.7), (2, "zh", 0.2)],
+            "doc_id bigint, lang string, n_chars double",
+        )
+        with pytest.raises(ValueError, match="permutation_test.*n_chars"):
+            permutation_test(df, "n_chars", "lang", "en", "zh")
+
 
 # ----------------------------------------------------------- sprt
 class TestSprtMonitor:
