@@ -6,7 +6,8 @@ distributed, point-in-time-correct engine over conversation-transcript
 tables:
 
 * stable turn ordering + dedup           (ordering.py)
-* lag/lead/backfill/rolling/sessionize   (windows.py)
+* lag/lead/backfill/rolling/sessionize, and 25 calendar statistics
+  over one (slice, epoch day) count table  (windows.py)
 * as-of (point-in-time) joins            (asof.py)
 * vectorized per-turn feature extraction (extract.py, features/)
 * distributed sufficient-statistics stats: Kruskal-Wallis chi-square,

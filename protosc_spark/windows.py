@@ -1,16 +1,33 @@
-"""Windowed feature operators: lag/lead, rolling backfill, trailing
-aggregates, gap-based sessionization.
+"""Windowed feature operators over event and transcript tables.
 
-These are the point-in-time operators the north rule adds on top of the
-reference (which has no time/order concept — reference
-protosc/pipeline.py processes samples independently). Every frame ends
-at the CURRENT row (or strictly before it, for the ``*_prev`` variants)
-— zero temporal leakage by construction; tests/test_leakage.py perturbs
-future rows and asserts past features are bit-identical.
+Two families live here:
 
-All operators are generic over (entity_col, order_cols) so the same code
-serves transcripts (conv_id, turn_idx) and the events table
-(user_id, ts) used for duckdb-oracle cross-checks.
+* Point-in-time row operators — lag/lead, rolling backfill, trailing
+  aggregates, gap-based sessionization, funnels, paths, transition
+  models, survival curves and per-entity stream features. These are
+  the operators the north rule adds on top of the reference (which has
+  no time/order concept — reference protosc/pipeline.py processes
+  samples independently). Every frame ends at the CURRENT row (or
+  strictly before it, for the ``*_prev`` variants) — zero temporal
+  leakage by construction; tests/test_leakage.py perturbs future rows
+  and asserts past features are bit-identical. They are generic over
+  (entity_col, order_cols), so the same code serves transcripts
+  (conv_id, turn_idx) and the events table (user_id, ts) used for
+  duckdb-oracle cross-checks.
+* The calendar family — 25 daily-volume statistics (trend, CUSUM,
+  EWMA, ACF/PACF/CCF, Mann-Kendall, weekday ANOVA/index/Friedman/
+  Page, Holt and Holt-Winters, breakpoint, Pettitt, runs, Hurst,
+  dispersion, Durbin-Watson, seasonal strength, anomaly days, bursts,
+  calendar coverage, top-k churn and the daily Wilson rate). They all
+  start from ONE sufficient statistic, the (slice, epoch day) -> row
+  count table built by :func:`_daily`, and answer their question from
+  that calendar-bounded table, never from raw rows again.
+
+NULL rule of the calendar family: a row whose timestamp or any slice
+key is NULL has no day or no slice, so :func:`_daily` drops it before
+counting — it never forms a phantom "NULL day" or "NULL slice". Other
+columns (e.g. the state read by daily_rate_wilson) are not keys; their
+NULLs are counted like any other value.
 
 Scale notes: one window spec = one shuffle on the entity key; chained
 operators reuse the same partitioning (Spark collapses adjacent Window
@@ -48,6 +65,220 @@ def _w(entity: str | Sequence[str], order: str | Sequence[str]):
     entity = [entity] if isinstance(entity, str) else list(entity)
     order = [order] if isinstance(order, str) else list(order)
     return W.partitionBy(*entity).orderBy(*order)
+
+
+def _daily(
+    df: DataFrame, keys: Sequence[str], ts_col: str, **extra: Column
+) -> DataFrame:
+    """The calendar family's one sufficient statistic: (*keys, x
+    BIGINT epoch day, y BIGINT rows that day, *extra aggregates named
+    by their keyword). Rows whose ``ts_col`` or any key is NULL are
+    dropped first — the module's NULL rule. One map-side-combinable
+    groupBy over the raw rows; everything downstream is
+    calendar-bounded."""
+    keep = F.col(ts_col).isNotNull()
+    for k in keys:
+        keep = keep & F.col(k).isNotNull()
+    day = F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
+    return df.where(keep).groupBy(*keys, day.cast("bigint").alias("x")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("y"),
+        *[c.alias(name) for name, c in extra.items()],
+    )
+
+
+def _series(
+    df: DataFrame, group_col: str, ts_col: str, *aggs: Column
+) -> DataFrame:
+    """Per-slice day-sorted series over :func:`_daily`: (group,
+    n_days, *aggs, series = sorted array of struct(x, y)) — the
+    calendar-bounded array the Catalyst ``aggregate`` folds walk."""
+    return _daily(df, [group_col], ts_col).groupBy(group_col).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        *aggs,
+        F.sort_array(F.collect_list(F.struct("x", "y"))).alias("series"),
+    )
+
+
+def _standardized_series(
+    df: DataFrame, group_col: str, ts_col: str
+) -> DataFrame:
+    """:func:`_series` plus the slice's sample moments ``mu`` and
+    ``sigma`` from exact DECIMAL sums; sigma is NULL for a one-day or
+    flat series."""
+    yd = F.col("y").cast("decimal(19,0)")
+    g = _series(
+        df, group_col, ts_col,
+        F.sum(yd).alias("sy"), F.sum(yd * yd).alias("syy"),
+    )
+    n, sy, syy = (
+        F.col(c).cast("double") for c in ("n_days", "sy", "syy")
+    )
+    var_num = n * syy - sy * sy
+    return g.withColumn("mu", sy / n).withColumn(
+        "sigma",
+        F.when(
+            (F.col("n_days") > 1) & (var_num > 0),
+            F.sqrt(var_num / (n * (n - 1))),
+        ),
+    )
+
+
+def _deviations(df: DataFrame, group_col: str, ts_col: str) -> DataFrame:
+    """Integer deviations of each slice's daily counts, (group, x,
+    d = n * y - S) with n the slice's day count and S its count sum —
+    the n-scaled ``y - ybar``, exact in DECIMAL(38,0). The daily
+    table feeds the moments and the deviations, so it is
+    materialized once (the dedup.py lineage-cut precedent; the table
+    is |groups| x days rows)."""
+    dec = "decimal(38,0)"
+    daily = (
+        _daily(df, [group_col], ts_col)
+        .withColumn("y", F.col("y").cast(dec))
+        .localCheckpoint(eager=True)
+    )
+    st = daily.groupBy(group_col).agg(
+        F.count(F.lit(1)).cast(dec).alias("__n"),
+        F.sum("y").alias("__s"),
+    )
+    return daily.join(st, group_col).select(
+        group_col,
+        "x",
+        (F.col("__n") * F.col("y") - F.col("__s")).alias("d"),
+    )
+
+
+def _value_ranks(frame: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Histogram of daily-count VALUES per ``keys`` with the exact
+    number of days below each value: (*keys, y, __c days at y,
+    __less days with a smaller count) — the tie-exact rank source of
+    the Pettitt, runs and within-week rank tests."""
+    wv = (
+        W.partitionBy(*keys)
+        .orderBy("y")
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    hist = frame.groupBy(*keys, "y").agg(
+        F.count(F.lit(1)).cast("bigint").alias("__c")
+    )
+    return hist.select(
+        *keys,
+        "y",
+        "__c",
+        (F.sum("__c").over(wv) - F.col("__c")).alias("__less"),
+    )
+
+
+def _week_ranks(
+    df: DataFrame, group_col: str, ts_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Doubled within-week midranks over complete calendar weeks
+    (epoch-day DIV 7 with all 7 days present): dmid = 2 * less +
+    ties + 1 off each week's value histogram, so even-split
+    averaging never leaves the integers. Returns (slices, rows):
+    every slice with a day row, and (group, wk, wd, __d
+    DECIMAL(38,0)) for the complete weeks."""
+    daily = _daily(df, [group_col], ts_col).select(
+        group_col,
+        "x",
+        "y",
+        F.expr("x DIV 7").alias("wk"),
+        F.pmod(F.col("x"), F.lit(7)).alias("wd"),
+    )
+    sz = daily.groupBy(group_col, "wk").agg(
+        F.count(F.lit(1)).alias("__bs")
+    )
+    full = (
+        daily.join(sz, [group_col, "wk"])
+        .where(F.col("__bs") == 7)
+        .drop("__bs")
+        # feeds the within-week histogram AND the rank join
+        .localCheckpoint(eager=True)
+    )
+    ranked = _value_ranks(full, [group_col, "wk"])
+    dmid = (
+        F.lit(2).cast("bigint") * F.col("__less")
+        + F.col("__c")
+        + F.lit(1)
+    )
+    rows = full.join(ranked, [group_col, "wk", "y"]).select(
+        group_col, "wk", "wd", dmid.cast("decimal(38,0)").alias("__d")
+    )
+    slices = daily.groupBy(group_col).agg(F.count(F.lit(1)))
+    return slices.select(group_col), rows
+
+
+def _since_first(group_col: str) -> Column:
+    """Day index t = x - (the slice's first day)."""
+    first = F.min("x").over(W.partitionBy(group_col))
+    return (F.col("x") - first).alias("t")
+
+
+def _detrend(days: DataFrame, group_col: str, unit: int) -> DataFrame:
+    """Join day rows (group, t, y, ...) to their slice's OLS line
+    y = a + b t, fit from exact integer moments (n, St, Sy, Stt,
+    Sty), adding the slope ``__b``, the day count ``__n`` and the
+    residual quantized ONCE to integer 1/``unit`` units, ``__d`` =
+    floor((y - (a + b t)) * unit) as DECIMAL(38,0)."""
+    dec = "decimal(38,0)"
+    mom = days.groupBy(group_col).agg(
+        F.count(F.lit(1)).cast(dec).alias("__n"),
+        F.sum("t").cast(dec).alias("__st"),
+        F.sum("y").cast(dec).alias("__sy"),
+        F.sum(F.col("t") * F.col("t")).cast(dec).alias("__stt"),
+        F.sum(F.col("t") * F.col("y")).cast(dec).alias("__sty"),
+    )
+    n = F.col("__n")
+    bden = n * F.col("__stt") - F.col("__st") * F.col("__st")
+    b = (
+        (n * F.col("__sty") - F.col("__st") * F.col("__sy"))
+        .cast("double")
+        / F.when(bden != 0, bden).cast("double")
+    )
+    a = (
+        F.col("__sy").cast("double")
+        - b * F.col("__st").cast("double")
+    ) / n.cast("double")
+    coef = mom.select(group_col, b.alias("__b"), a.alias("__a"), "__n")
+    resid = F.col("y").cast("double") - (
+        F.col("__a") + F.col("__b") * F.col("t").cast("double")
+    )
+    return days.join(coef, group_col).withColumn(
+        "__d", F.floor(resid * F.lit(float(unit))).cast(dec)
+    )
+
+
+def _weekday_detrend(
+    df: DataFrame,
+    group_col: str,
+    ts_col: str,
+    unit: int,
+    *cols: str | Column,
+) -> tuple[DataFrame, DataFrame]:
+    """The trend + weekly-season decomposition prefix: day rows
+    detrended by :func:`_detrend` (group, wd, __d, *cols), and each
+    slice's integer weekday effects (group, wd, __s = floor(mean
+    __d)). Weekday is epoch-based (x mod 7, 0 = Thursday). The day
+    rows feed the effects and every later consumer, so the raw scan
+    and the coefficient join run once (lineage cut)."""
+    days = _daily(df, [group_col], ts_col).select(
+        group_col,
+        "x",
+        "y",
+        _since_first(group_col),
+        F.pmod(F.col("x"), F.lit(7)).alias("wd"),
+    )
+    det = (
+        _detrend(days, group_col, unit)
+        .select(group_col, "wd", "__d", *cols)
+        .localCheckpoint(eager=True)
+    )
+    swd = det.groupBy(group_col, "wd").agg(
+        F.floor(
+            F.sum("__d").cast("double")
+            / F.count(F.lit(1)).cast("double")
+        ).cast("decimal(38,0)").alias("__s")
+    )
+    return det, swd
 
 
 def with_lag_lead(
@@ -442,15 +673,7 @@ def volume_trend(df: DataFrame, group_col: str,
     combinable — then closed-form math on a rows-per-group-days
     table. Pure JVM, no windows."""
     dec = "decimal(19,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    )
+    daily = _daily(df, [group_col], ts_col)
     xd, yd = F.col("x").cast(dec), F.col("y").cast(dec)
     s = daily.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
@@ -546,35 +769,7 @@ def volume_cusum(
     at most — never corpus-sized), folded by a Catalyst higher-order
     ``aggregate`` — the recursion runs in the JVM, zero Python, and
     the mu/sigma moments come from exact DECIMAL sums."""
-    dec = "decimal(19,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    )
-    yd = F.col("y").cast(dec)
-    g = daily.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sum(yd).alias("sy"),
-        F.sum(yd * yd).alias("syy"),
-        F.sort_array(F.collect_list(F.struct("x", "y")))
-        .alias("series"),
-    )
-    n, sy, syy = (
-        F.col(c).cast("double") for c in ("n_days", "sy", "syy")
-    )
-    var_num = n * syy - sy * sy
-    g = g.withColumn("mu", sy / n).withColumn(
-        "sigma",
-        F.when(
-            (F.col("n_days") > 1) & (var_num > 0),
-            F.sqrt(var_num / (n * (n - 1))),
-        ),
-    )
+    g = _standardized_series(df, group_col, ts_col)
     init = F.struct(
         F.lit(0.0).alias("sp"),
         F.lit(0.0).alias("sn"),
@@ -1143,36 +1338,8 @@ def volume_ewma(
     (group, day) counts; each slice's series is a calendar-bounded
     array folded by a Catalyst higher-order ``aggregate``, zero
     Python."""
-    dec = "decimal(19,0)"
     beta = 1.0 - alpha
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    )
-    yd = F.col("y").cast(dec)
-    g = daily.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sum(yd).alias("sy"),
-        F.sum(yd * yd).alias("syy"),
-        F.sort_array(F.collect_list(F.struct("x", "y")))
-        .alias("series"),
-    )
-    n, sy, syy = (
-        F.col(c).cast("double") for c in ("n_days", "sy", "syy")
-    )
-    var_num = n * syy - sy * sy
-    g = g.withColumn("mu", sy / n).withColumn(
-        "sigma",
-        F.when(
-            (F.col("n_days") > 1) & (var_num > 0),
-            F.sqrt(var_num / (n * (n - 1))),
-        ),
-    )
+    g = _standardized_series(df, group_col, ts_col)
     init = F.struct(
         F.col("mu").alias("z"),
         F.lit(1.0).alias("w"),
@@ -1249,33 +1416,7 @@ def volume_acf(
     n_pairs, acf), acf NULL for a constant series (zero
     denominator); slices shorter than lag+1 days emit no row for
     that lag."""
-    dec = "decimal(38,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast(dec).alias("y"))
-        # the calendar-bounded daily table feeds moments, deviations
-        # and both sides of the lag join — materialize it once so the
-        # raw scan runs once, not once per branch (the dedup.py
-        # lineage-cut precedent; the table is |groups| x days rows)
-        .localCheckpoint(eager=True)
-    )
-    st = daily.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast(dec).alias("__n"),
-        F.sum("y").alias("__s"),
-    )
-    dev = (
-        daily.join(st, group_col)
-        .select(
-            group_col,
-            "x",
-            (F.col("__n") * F.col("y") - F.col("__s")).alias("d"),
-        )
-    )
+    dev = _deviations(df, group_col, ts_col)
     den = dev.groupBy(group_col).agg(
         F.sum(F.col("d") * F.col("d")).alias("__den")
     )
@@ -1340,18 +1481,9 @@ def trend_mk(
     x_i) — quadratic in DAYS (thousands at most), never in rows; the
     tie term from the count-value histogram. Output: (group, n_days,
     mk_s, mk_z, sen_slope); z/sen NULL when fewer than 2 days."""
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-        # reused by the pair join (both sides) and the tie rollup —
-        # materialize once (calendar-bounded; see volume_acf note)
-        .localCheckpoint(eager=True)
-    )
+    # reused by the pair join (both sides) and the tie rollup —
+    # materialize once (calendar-bounded; see _deviations)
+    daily = _daily(df, [group_col], ts_col).localCheckpoint(eager=True)
     right = daily.select(
         F.col(group_col).alias("__g2"),
         F.col("x").alias("__x2"),
@@ -1449,14 +1581,8 @@ def weekday_anova(
     Output: (group, n_days, k_bins, f_stat, eta_sq) — NULL when
     dof is empty (k < 2 or n = k)."""
     dec = "decimal(38,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast(dec).alias("y"))
+    daily = _daily(df, [group_col], ts_col).withColumn(
+        "y", F.col("y").cast(dec)
     )
     bins = daily.groupBy(
         group_col, F.pmod(F.col("x"), F.lit(7)).alias("w")
@@ -1530,33 +1656,8 @@ def volume_ccf(
     exploded lag dimension — |groups|^2 x days x (2L+1) at most,
     never row-sized. Output: (g1, g2, lag, n_pairs, ccf); ccf NULL
     when either series is constant (zero variance)."""
-    dec = "decimal(38,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast(dec).alias("y"))
-        # feeds moments + deviations + both join sides (8 raw scans
-        # without this) — materialize once (calendar-bounded)
-        .localCheckpoint(eager=True)
-    )
-    st = daily.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast(dec).alias("__n"),
-        F.sum("y").alias("__s"),
-    )
-    dev = (
-        daily.join(st, group_col)
-        .select(
-            group_col,
-            "x",
-            (F.col("__n") * F.col("y") - F.col("__s")).alias("d"),
-        )
-        # deviations feed the denominator and BOTH lag-join sides
-        .localCheckpoint(eager=True)
-    )
+    # deviations feed the denominator and BOTH lag-join sides
+    dev = _deviations(df, group_col, ts_col).localCheckpoint(eager=True)
     den = dev.groupBy(group_col).agg(
         F.sum(F.col("d") * F.col("d")).alias("__den")
     )
@@ -1640,21 +1741,7 @@ def holt_trend(
     Output: (group, n_days, level, trend, forecast, rmse, mae);
     trend/forecast NULL for single-day slices, rmse/mae NULL below
     3 days. Forecast is the one-step-ahead l + b."""
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    )
-    g = daily.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sort_array(F.collect_list(F.struct("x", "y"))).alias(
-            "series"
-        ),
-    )
+    g = _series(df, group_col, ts_col)
     n = F.col("n_days")
     y1 = F.element_at("series", 1)["y"].cast("double")
     y2 = F.element_at("series", 2)["y"].cast("double")
@@ -1818,18 +1905,10 @@ def daily_rate_wilson(
     digit-for-digit. Output: (day, n, k, rate, ci_lo, ci_hi) with
     ``day`` the epoch-day integer; rows for every day with any
     event."""
-    daily = df.groupBy(
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-        .cast("bigint")
-        .alias("day")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(
-            F.when(F.col(state_col) == convert_state, 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("k"),
-    )
+    converted = F.when(F.col(state_col) == convert_state, 1).otherwise(0)
+    daily = _daily(
+        df, [], ts_col, k=F.sum(converted).cast("bigint")
+    ).select(F.col("x").alias("day"), F.col("y").alias("n"), "k")
     zz = F.lit(float(z))
     n = F.col("n").cast("double")
     p = F.col("k").cast("double") / n
@@ -1888,15 +1967,7 @@ def volume_breakpoint(
     segment; bp/slopes/sse_split NULL when the slice has fewer than
     2*min_seg days, sse_single NULL below 2 days."""
     dec = "decimal(19,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    )
+    daily = _daily(df, [group_col], ts_col)
     xd, yd = F.col("x").cast(dec), F.col("y").cast(dec)
     pts = daily.select(
         group_col,
@@ -2222,14 +2293,8 @@ def weekday_index(
     n_days, mean_volume, seasonal_index) — NULL only for an
     all-empty slice (S = 0)."""
     dec = "decimal(38,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast(dec).alias("y"))
+    daily = _daily(df, [group_col], ts_col).withColumn(
+        "y", F.col("y").cast(dec)
     )
     byw = daily.groupBy(
         group_col, F.pmod(F.col("x"), F.lit(7)).cast("int").alias(
@@ -2293,12 +2358,9 @@ def volume_dispersion(
     n_days, n_active_days, total, fano, dispersion, z,
     overdispersed); statistics NULL when n < 2 or total = 0."""
     dec = "decimal(38,0)"
-    daily = df.groupBy(
-        group_col,
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-        .cast("bigint")
-        .alias("x"),
-    ).agg(F.count(F.lit(1)).cast(dec).alias("y"))
+    daily = _daily(df, [group_col], ts_col).withColumn(
+        "y", F.col("y").cast(dec)
+    )
     g = daily.groupBy(group_col).agg(
         (
             F.max("x") - F.min("x") + F.lit(1)
@@ -2359,31 +2421,9 @@ def volume_pettitt(
     argmax day). Days with no rows are not zero-filled (the
     volume_trend convention). Output: (group, n_days, k_stat,
     cp_day, p_value, significant); NULL statistics below 2 days."""
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-        # feeds the value histogram AND the V join — scan once
-        .localCheckpoint(eager=True)
-    )
-    hist = daily.groupBy(group_col, "y").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    wv = (
-        W.partitionBy(group_col)
-        .orderBy("y")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    ranks = hist.select(
-        group_col,
-        "y",
-        "c",
-        (F.sum("c").over(wv) - F.col("c")).alias("__less"),
-    )
+    # feeds the value histogram AND the V join — scan once
+    daily = _daily(df, [group_col], ts_col).localCheckpoint(eager=True)
+    ranks = _value_ranks(daily, [group_col])
     tot = daily.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("__t"),
         F.max("x").alias("__xmax"),
@@ -2398,7 +2438,7 @@ def volume_pettitt(
             "__xmax",
             (
                 F.lit(2).cast("bigint") * F.col("__less")
-                + F.col("c")
+                + F.col("__c")
                 - F.col("__t")
             ).alias("__v"),
         )
@@ -2483,31 +2523,9 @@ def volume_runs_test(
     Days with no rows are not zero-filled (the volume_trend
     convention). Output: (group, n_days, n_above, n_below, runs, z,
     nonrandom); z NULL when either side is empty or var = 0."""
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-        # feeds the histogram AND the labeled sequence — scan once
-        .localCheckpoint(eager=True)
-    )
-    hist = daily.groupBy(group_col, "y").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    wv = (
-        W.partitionBy(group_col)
-        .orderBy("y")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    cum = hist.select(
-        group_col,
-        "y",
-        F.sum("c").over(wv).alias("__cum"),
-        (F.sum("c").over(wv) - F.col("c")).alias("__prev"),
-    )
+    # feeds the histogram AND the labeled sequence — scan once
+    daily = _daily(df, [group_col], ts_col).localCheckpoint(eager=True)
+    hist = _value_ranks(daily, [group_col])
     tot = daily.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("__nd")
     )
@@ -2517,22 +2535,21 @@ def volume_runs_test(
         F.expr("(__nd + 1) DIV 2").alias("__rlo"),
         F.expr("__nd DIV 2 + 1").alias("__rhi"),
     )
+    less, upto = F.col("__less"), F.col("__less") + F.col("__c")
     med = (
-        cum.join(ranks, group_col)
+        hist.join(ranks, group_col)
         .groupBy(group_col, "__nd")
         .agg(
             (
                 F.min(
                     F.when(
-                        (F.col("__cum") >= F.col("__rlo"))
-                        & (F.col("__prev") < F.col("__rlo")),
+                        (upto >= F.col("__rlo")) & (less < F.col("__rlo")),
                         F.col("y"),
                     )
                 )
                 + F.min(
                     F.when(
-                        (F.col("__cum") >= F.col("__rhi"))
-                        & (F.col("__prev") < F.col("__rhi")),
+                        (upto >= F.col("__rhi")) & (less < F.col("__rhi")),
                         F.col("y"),
                     )
                 )
@@ -2636,15 +2653,7 @@ def volume_hurst(
     group. Output: (group, n_days, n_sizes, hurst); hurst NULL
     below 2 usable sizes."""
     dec = "decimal(38,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    )
+    daily = _daily(df, [group_col], ts_col)
     wrn = W.partitionBy(group_col).orderBy("x")
     seq = daily.select(
         group_col,
@@ -2796,55 +2805,7 @@ def weekday_friedman(
     significant); NULL statistics when no complete week or every
     week is all-tied."""
     dec = "decimal(38,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-        .select(
-            group_col,
-            "x",
-            "y",
-            F.expr("x DIV 7").alias("wk"),
-            F.pmod(F.col("x"), F.lit(7)).alias("wd"),
-        )
-    )
-    sz = daily.groupBy(group_col, "wk").agg(
-        F.count(F.lit(1)).alias("__bs")
-    )
-    full = (
-        daily.join(sz, [group_col, "wk"])
-        .where(F.col("__bs") == 7)
-        .drop("__bs")
-        # feeds the within-week histogram AND the rank join
-        .localCheckpoint(eager=True)
-    )
-    hist = full.groupBy(group_col, "wk", "y").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c")
-    )
-    wv = (
-        W.partitionBy(group_col, "wk")
-        .orderBy("y")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    ranked = hist.select(
-        group_col,
-        "wk",
-        "y",
-        "__c",
-        (F.sum("__c").over(wv) - F.col("__c")).alias("__less"),
-    )
-    dmid = (
-        F.lit(2).cast("bigint") * F.col("__less")
-        + F.col("__c")
-        + F.lit(1)
-    )
-    rows = full.join(ranked, [group_col, "wk", "y"]).select(
-        group_col, "wk", "wd", dmid.cast(dec).alias("__d")
-    )
+    slices, rows = _week_ranks(df, group_col, ts_col)
     per_wd = rows.groupBy(group_col, "wd").agg(
         F.sum("__d").alias("__r2")
     )
@@ -2868,10 +2829,8 @@ def weekday_friedman(
         F.lit(1.0) + h + h * h / F.lit(2.0)
     )
     ok = (F.col("__n") >= 1) & (den > 0)
-    base = daily.groupBy(group_col).agg(F.count(F.lit(1)))
     return (
-        base.select(group_col)
-        .join(s, group_col, "left")
+        slices.join(s, group_col, "left")
         .select(
             group_col,
             F.coalesce(
@@ -2908,14 +2867,8 @@ def topk_churn(
     rows); jaccard/churn are one division each. Output: one row per
     paired day (day_a, day_b, n_a, n_b, overlap, entered, left,
     jaccard, churn), day = epoch day."""
-    daily = (
-        df.groupBy(
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-            F.col(entity_col).alias("e"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
+    daily = _daily(df, [entity_col], ts_col).select(
+        "x", F.col(entity_col).alias("e"), "y"
     )
     wd = W.partitionBy("x").orderBy(
         F.col("y").desc(), F.col("e").asc()
@@ -3086,54 +3039,7 @@ def weekday_page(
     Output: (group, n_weeks, l_stat, z, significant); NULL
     statistics when no complete week exists."""
     dec = "decimal(38,0)"
-    daily = (
-        df.groupBy(
-            group_col,
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-            .cast("bigint")
-            .alias("x"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-        .select(
-            group_col,
-            "x",
-            "y",
-            F.expr("x DIV 7").alias("wk"),
-            F.pmod(F.col("x"), F.lit(7)).alias("wd"),
-        )
-    )
-    sz = daily.groupBy(group_col, "wk").agg(
-        F.count(F.lit(1)).alias("__bs")
-    )
-    full = (
-        daily.join(sz, [group_col, "wk"])
-        .where(F.col("__bs") == 7)
-        .drop("__bs")
-        .localCheckpoint(eager=True)
-    )
-    hist = full.groupBy(group_col, "wk", "y").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c")
-    )
-    wv = (
-        W.partitionBy(group_col, "wk")
-        .orderBy("y")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    ranked = hist.select(
-        group_col,
-        "wk",
-        "y",
-        "__c",
-        (F.sum("__c").over(wv) - F.col("__c")).alias("__less"),
-    )
-    dmid = (
-        F.lit(2).cast("bigint") * F.col("__less")
-        + F.col("__c")
-        + F.lit(1)
-    )
-    rows = full.join(ranked, [group_col, "wk", "y"]).select(
-        group_col, "wk", "wd", dmid.cast(dec).alias("__d")
-    )
+    slices, rows = _week_ranks(df, group_col, ts_col)
     s = rows.groupBy(group_col).agg(
         F.countDistinct("wk").cast(dec).alias("__n"),
         F.sum(
@@ -3148,10 +3054,8 @@ def weekday_page(
         * F.sqrt(F.lit(392.0) * nd / F.lit(3.0))
     )
     ok = F.col("__n") >= 1
-    base = daily.groupBy(group_col).agg(F.count(F.lit(1)))
     return (
-        base.select(group_col)
-        .join(s, group_col, "left")
+        slices.join(s, group_col, "left")
         .select(
             group_col,
             F.coalesce(
@@ -3200,66 +3104,23 @@ def durbin_watson(
     ('positive', 'none', 'negative'); NULL statistics when fewer
     than 3 days or a zero residual vector (perfect line)."""
     dec = "decimal(38,0)"
-    daily = df.groupBy(
-        group_col, F.to_date(ts_col).alias("__day")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("__y"))
-    wmin = W.partitionBy(group_col)
-    witht = daily.withColumn(
-        "__t",
-        F.datediff(
-            F.col("__day"), F.min("__day").over(wmin)
-        ).cast("bigint"),
-        # day rows feed the moment rollup AND the residual join —
-        # cut the lineage so the raw scan runs once
+    # day rows feed the moment rollup AND the residual join — cut the
+    # lineage so the raw scan runs once
+    days = _daily(df, [group_col], ts_col).select(
+        group_col, "x", "y", _since_first(group_col)
     ).localCheckpoint(eager=True)
-    mom = witht.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast(dec).alias("__n"),
-        F.sum("__t").cast(dec).alias("__st"),
-        F.sum("__y").cast(dec).alias("__sy"),
-        F.sum(F.col("__t") * F.col("__t")).cast(dec).alias("__stt"),
-        F.sum(F.col("__t") * F.col("__y")).cast(dec).alias("__sty"),
+    res = _detrend(days, group_col, unit).select(
+        group_col, "x", "__n", F.col("__b").alias("slope"), "__d"
     )
-    n = F.col("__n")
-    bden = (n * F.col("__stt") - F.col("__st") * F.col("__st"))
-    b = (
-        (n * F.col("__sty") - F.col("__st") * F.col("__sy"))
-        .cast("double")
-        / F.when(bden != 0, bden).cast("double")
-    )
-    a = (
-        F.col("__sy").cast("double") - b * F.col("__st").cast(
-            "double"
-        )
-    ) / n.cast("double")
-    coef = mom.select(
-        group_col, b.alias("__b"), a.alias("__a"), "__n"
-    )
-    u = F.lit(float(unit))
-    res = witht.join(coef, group_col).select(
-        group_col,
-        "__day",
-        "__n",
-        F.col("__b").alias("slope"),
-        F.floor(
-            (
-                F.col("__y").cast("double")
-                - (
-                    F.col("__a")
-                    + F.col("__b") * F.col("__t").cast("double")
-                )
-            )
-            * u
-        ).cast(dec).alias("__eq"),
-    )
-    wlag = W.partitionBy(group_col).orderBy("__day")
+    wlag = W.partitionBy(group_col).orderBy("x")
     diff = res.withColumn(
-        "__d", F.col("__eq") - F.lag("__eq").over(wlag)
+        "__dd", F.col("__d") - F.lag("__d").over(wlag)
     )
     g = diff.groupBy(group_col).agg(
         F.max("__n").alias("__n"),
         F.max("slope").alias("slope"),
-        F.sum(F.col("__eq") * F.col("__eq")).alias("__den"),
-        F.sum(F.col("__d") * F.col("__d")).alias("__num"),
+        F.sum(F.col("__d") * F.col("__d")).alias("__den"),
+        F.sum(F.col("__dd") * F.col("__dd")).alias("__num"),
     )
     ok = (
         (F.col("__n") >= F.lit(3).cast(dec))
@@ -3314,64 +3175,10 @@ def seasonal_strength(
     slice has < 14 days or a degenerate variance. Weekday index is
     epoch-based (0 = Thursday)."""
     dec = "decimal(38,0)"
-    daily = df.groupBy(
-        group_col,
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-        .cast("bigint")
-        .alias("x"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    wmin = W.partitionBy(group_col)
-    witht = daily.select(
-        group_col,
-        "x",
-        "y",
-        (F.col("x") - F.min("x").over(wmin)).alias("t"),
-        F.pmod(F.col("x"), F.lit(7)).alias("wd"),
-    )
-    mom = witht.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast(dec).alias("__n"),
-        F.sum("t").cast(dec).alias("__st"),
-        F.sum("y").cast(dec).alias("__sy"),
-        F.sum(F.col("t") * F.col("t")).cast(dec).alias("__stt"),
-        F.sum(F.col("t") * F.col("y")).cast(dec).alias("__sty"),
-    )
-    n = F.col("__n")
-    bden = n * F.col("__stt") - F.col("__st") * F.col("__st")
-    b = (
-        (n * F.col("__sty") - F.col("__st") * F.col("__sy"))
-        .cast("double")
-        / F.when(bden != 0, bden).cast("double")
-    )
-    a = (
-        F.col("__sy").cast("double")
-        - b * F.col("__st").cast("double")
-    ) / n.cast("double")
-    coef = mom.select(group_col, b.alias("__b"), a.alias("__a"))
-    u = F.lit(float(unit))
-    det = witht.join(coef, group_col).select(
-        group_col,
-        "wd",
+    det, swd = _weekday_detrend(
+        df, group_col, ts_col, unit,
         F.col("__b").alias("slope"),
         (F.col("y") * F.lit(unit)).cast(dec).alias("__yu"),
-        F.floor(
-            (
-                F.col("y").cast("double")
-                - (
-                    F.col("__a")
-                    + F.col("__b") * F.col("t").cast("double")
-                )
-            )
-            * u
-        ).cast(dec).alias("__d"),
-        # day-table rows feed three consumers (weekday means, the
-        # peak table, the remainder rollup) — cut the lineage so the
-        # raw scan and the coefficient join run once
-    ).localCheckpoint(eager=True)
-    swd = det.groupBy(group_col, "wd").agg(
-        F.floor(
-            F.sum("__d").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).cast(dec).alias("__s")
     )
     peaks = swd.groupBy(group_col).agg(
         F.max(
@@ -3471,18 +3278,7 @@ def holt_winters(
     Output: (group, n_days, level, trend, season array of 7 doubles
     indexed by epoch weekday, forecast, rmse, mae); level/trend/
     season/forecast NULL below 14 days, rmse/mae NULL below 15."""
-    daily = df.groupBy(
-        group_col,
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-        .cast("bigint")
-        .alias("x"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    g = daily.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sort_array(F.collect_list(F.struct("x", "y"))).alias(
-            "series"
-        ),
-    )
+    g = _series(df, group_col, ts_col)
     n = F.col("n_days")
 
     def _wsum(lo, cnt):
@@ -3594,25 +3390,15 @@ def calendar_coverage(
     observed_days, missing_days, longest_gap, coverage) with
     coverage = observed / span as one exact-integer division;
     longest_gap 0 for a complete series."""
-    daily = df.groupBy(
+    w = W.partitionBy(group_col).orderBy("x")
+    gaps = _daily(df, [group_col], ts_col).select(
         group_col,
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-        .cast("bigint")
-        .alias("__day"),
-    ).agg(F.count(F.lit(1)).alias("__cnt"))
-    w = W.partitionBy(group_col).orderBy("__day")
-    gaps = daily.select(
-        group_col,
-        "__day",
-        (
-            F.col("__day")
-            - F.lag("__day").over(w)
-            - F.lit(1)
-        ).alias("__gap"),
+        "x",
+        (F.col("x") - F.lag("x").over(w) - F.lit(1)).alias("__gap"),
     )
     g = gaps.groupBy(group_col).agg(
-        F.min("__day").alias("first_day"),
-        F.max("__day").alias("last_day"),
+        F.min("x").alias("first_day"),
+        F.max("x").alias("last_day"),
         F.count(F.lit(1)).cast("bigint").alias("observed_days"),
         F.coalesce(
             F.sum("__gap").cast("bigint"), F.lit(0)
@@ -3667,62 +3453,8 @@ def anomaly_days(
     construction of the caller's sort; empty when the slice is
     clean or shorter than 14 days."""
     dec = "decimal(38,0)"
-    daily = df.groupBy(
-        group_col,
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-        .cast("bigint")
-        .alias("x"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    wmin = W.partitionBy(group_col)
-    witht = daily.select(
-        group_col,
-        "x",
-        "y",
-        (F.col("x") - F.min("x").over(wmin)).alias("t"),
-        F.pmod(F.col("x"), F.lit(7)).alias("wd"),
-    )
-    mom = witht.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast(dec).alias("__n"),
-        F.sum("t").cast(dec).alias("__st"),
-        F.sum("y").cast(dec).alias("__sy"),
-        F.sum(F.col("t") * F.col("t")).cast(dec).alias("__stt"),
-        F.sum(F.col("t") * F.col("y")).cast(dec).alias("__sty"),
-    )
-    n = F.col("__n")
-    bden = n * F.col("__stt") - F.col("__st") * F.col("__st")
-    b = (
-        (n * F.col("__sty") - F.col("__st") * F.col("__sy"))
-        .cast("double")
-        / F.when(bden != 0, bden).cast("double")
-    )
-    a = (
-        F.col("__sy").cast("double")
-        - b * F.col("__st").cast("double")
-    ) / n.cast("double")
-    coef = mom.select(group_col, b.alias("__b"), a.alias("__a"))
     u = F.lit(float(unit))
-    det = witht.join(coef, group_col).select(
-        group_col,
-        "x",
-        "y",
-        "wd",
-        F.floor(
-            (
-                F.col("y").cast("double")
-                - (
-                    F.col("__a")
-                    + F.col("__b") * F.col("t").cast("double")
-                )
-            )
-            * u
-        ).cast(dec).alias("__d"),
-    ).localCheckpoint(eager=True)
-    swd = det.groupBy(group_col, "wd").agg(
-        F.floor(
-            F.sum("__d").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).cast(dec).alias("__s")
-    )
+    det, swd = _weekday_detrend(df, group_col, ts_col, unit, "x", "y")
     rows = det.join(swd, [group_col, "wd"]).select(
         group_col,
         "x",
@@ -3801,18 +3533,8 @@ def burst_intervals(
     row per burst (group, start_day, end_day epoch BIGINTs,
     n_days, volume, expected, intensity = volume/expected); empty
     when a slice never enters the burst state (or < 2 days)."""
-    daily = df.groupBy(
-        group_col,
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01"))
-        .cast("bigint")
-        .alias("x"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    g = daily.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        F.sum("y").cast("bigint").alias("__tot"),
-        F.sort_array(F.collect_list(F.struct("x", "y"))).alias(
-            "series"
-        ),
+    g = _series(
+        df, group_col, ts_col, F.sum("y").cast("bigint").alias("__tot")
     )
     n = F.col("n_days")
     lam0 = F.col("__tot").cast("double") / n.cast("double")

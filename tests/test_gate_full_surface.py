@@ -32,6 +32,27 @@ def test_every_oracle_names_a_query():
     assert set(_ORACLES) <= set(_QUERIES)
 
 
+def test_check_correctness_rejects_unknown_ids():
+    """tools/check_correctness.py must refuse a mistyped query id
+    before Spark starts (exit 2, naming it) instead of running nothing
+    and reporting 0 failures."""
+    import subprocess
+    import sys
+
+    tool = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "check_correctness.py",
+    )
+    known = _QUERIES[0]
+    r = subprocess.run(
+        [sys.executable, tool, SF_DIR, known, "no_such_query"],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 2, r.stderr
+    assert "no_such_query" in r.stderr and known not in r.stderr
+    assert "log4j" not in r.stderr  # the JVM never started
+
+
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()

@@ -4,6 +4,7 @@ synthetic transcripts."""
 
 import duckdb
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from protosc_spark.windows import (
@@ -3151,3 +3152,111 @@ def test_time_decay_custom_entity_and_order_cols(spark, events):
             base.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     for r in got:
         assert r["n"] == want[r["user_id"]] and r["mx"] == r["n"]
+
+
+# --- the calendar family's NULL rule and hostile inputs ----------------
+#
+# Every calendar statistic reads the one (slice, epoch day) -> count
+# table, whose builder drops rows with a NULL timestamp or a NULL slice
+# key. So adding such rows to an input must leave every output
+# unchanged, and degenerate inputs (no rows, one row) must give a
+# defined result instead of raising.
+
+def _cal_calls():
+    import protosc_spark.windows as win
+
+    def keyed(name, **kw):
+        return name, (lambda df: getattr(win, name)(df, "g", **kw)), "g"
+
+    calls = [keyed(n) for n in (
+        "volume_trend", "volume_cusum", "volume_ewma", "volume_acf",
+        "trend_mk", "weekday_anova", "volume_ccf", "holt_trend",
+        "volume_breakpoint", "volume_pacf", "weekday_index",
+        "volume_dispersion", "volume_pettitt", "volume_runs_test",
+        "volume_hurst", "weekday_friedman", "weekday_page",
+        "durbin_watson", "seasonal_strength", "holt_winters",
+        "calendar_coverage", "burst_intervals",
+    )]
+    calls += [
+        keyed("topk_churn", k=2),
+        keyed("anomaly_days", z_crit=2.0),
+        # the one keyless member: no slice key to NULL
+        ("daily_rate_wilson",
+         lambda df: win.daily_rate_wilson(df, "g", "a"), None),
+    ]
+    return calls
+
+
+_CAL_CALLS = _cal_calls()
+_CAL_CASES = ("null_ts", "null_key", "empty", "one_row")
+
+
+def _cal_rows():
+    """Three slices over five complete epoch weeks: a weekly rhythm on
+    a rising line (a), a flat slice with a 4-day burst (b) and a
+    shorter slice with a 3-day hole (c)."""
+    import datetime as dt
+
+    t0 = dt.datetime(1970, 1, 1, 6, 30)  # epoch day 0 is a week start
+    rows = []
+    for d in range(35):
+        day = t0 + dt.timedelta(days=d)
+        rows += [("a", day)] * (3 + d % 7 + d // 7)
+        rows += [("b", day)] * (25 if 20 <= d < 24 else 5 + (3 * d) % 4)
+        if d < 30 and not 10 <= d < 13:
+            rows += [("c", day)] * (2 + d % 3)
+    return rows
+
+
+def _cal_output(df):
+    return sorted(repr(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def cal_base(spark):
+    schema = "g string, ts timestamp"
+    rows = _cal_rows()
+    frames = {
+        "base": spark.createDataFrame(rows, schema),
+        "null_ts": spark.createDataFrame(
+            rows + [("a", None), ("b", None), (None, None)], schema
+        ),
+        "null_key": spark.createDataFrame(
+            rows + [(None, t) for g, t in rows if g == "a"], schema
+        ),
+        "empty": spark.createDataFrame([], schema),
+        "one_row": spark.createDataFrame(rows[:1], schema),
+    }
+    return frames, {}
+
+
+@pytest.mark.parametrize(
+    "case, call",
+    [
+        pytest.param(case, call, id=f"{case}-{call[0]}")
+        for call in _CAL_CALLS
+        for case in _CAL_CASES
+    ],
+)
+def test_calendar_family_drops_null_rows(cal_base, case, call):
+    """NULL-ts rows, and a copy of slice ``a`` under a NULL key, leave
+    every calendar statistic equal to its output on the clean input;
+    an empty frame gives no rows and a one-row frame at most one
+    row. The keyless ``daily_rate_wilson`` has no key to NULL, so its
+    ``null_key`` input is the clean fixture."""
+    frames, cache = cal_base
+    name, fn, key = call
+    if case == "empty":
+        assert fn(frames["empty"]).collect() == []
+        return
+    if case == "one_row":
+        assert len(fn(frames["one_row"]).collect()) <= 1
+        return
+    if name not in cache:
+        cache[name] = _cal_output(fn(frames["base"]))
+    want = cache[name]
+    assert want, name  # the fixture exercises every statistic
+    src = frames["base"] if case == "null_key" and key is None else (
+        frames[case]
+    )
+    assert _cal_output(fn(src)) == want

@@ -3,6 +3,10 @@ __spark_entry__ query at sf0.01 AND its DuckDB oracle, compare
 row-count / column names / values (order-insensitive, float-rounded).
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+
+Query ids are checked against the registry before Spark starts; any
+unknown id exits 2 and names it, so a mistyped id never passes by
+running nothing.
 """
 
 from __future__ import annotations
@@ -41,6 +45,10 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    unknown = sorted(only - set(entrymod.queries()))
+    if unknown:
+        print(f"unknown query ids: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark("check_correctness")
     con = duckdb.connect()
     for t in TABLES:
